@@ -15,27 +15,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_engineering_hs_spark.catalog import enable_table_cache
 from data_engineering_hs_spark.queries import REGISTRY, load_all
 
 load_all()
 
 SF0001_DIR = "/root/testdata/sf0.001"
 
-
-def _cached(fn):
-    # The driver runs ~100 queries back-to-back against the same tiny
-    # sf0.01 tables — cache each table per session instead of
-    # re-scanning parquet per query. Enabled lazily on the first CALL
-    # of a driver callable (not at import): tests import this module
-    # to check the contract, and an import-time enable would leak the
-    # cache into every later suite and break the parquet plan-shape
-    # assertions (InMemoryRelation has no PushedFilters).
-    def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        enable_table_cache()
-        return fn(spark, sf_dir)
-
-    return wrapper
 
 # The driver verifies ~50 registry entries per round (count or
 # wall-clock budget). queries()/oracle_sql() therefore iterate:
@@ -303,12 +288,12 @@ def _ordered_names() -> list[str]:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return _cached(REGISTRY["flagship_daily_kpi"].fn)(spark, SF0001_DIR)
+    return REGISTRY["flagship_daily_kpi"].fn(spark, SF0001_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator query (SURVEY.md §2)."""
-    return {name: _cached(REGISTRY[name].fn) for name in _ordered_names()}
+    return {name: REGISTRY[name].fn for name in _ordered_names()}
 
 
 def oracle_sql() -> dict[str, str]:

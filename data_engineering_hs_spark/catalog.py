@@ -1,17 +1,16 @@
-"""Dataset catalog: explicit StructType schemas + loaders.
+"""Dataset catalog: testdata loaders + reference dataset schemas.
 
 The reference prefers explicit schemas handed to readers
 (revenue_analysis/main.ipynb:89-150 StructType;
 generate_fuel_exports.py:127-151 arrow schema;
 lab05-airflow/sql/001_create_table.sql DDL) with inference as a
 demonstrated fallback (mini-lab-hdfs+spark-local/spark.ipynb:205-208).
-This module is the engine's equivalent: one place declaring the
-contract of every named dataset (SURVEY.md §1.4) plus loaders for the
-driver testdata tables.
-
-At 100 TB scale, explicit schemas are not cosmetic: they skip the
-inference pass (a full extra scan for CSV/JSON), enable nested-schema
-pruning, and pin decimal/timestamp semantics across engines.
+This module declares the StructType contracts of the reference-shaped
+ingestion datasets (SURVEY.md §1.4) and loads the driver testdata
+tables. Testdata schemas are not declared: each table's schema is
+inferred from its parquet footer once per file version and handed to
+every later read (see _read_table), so repeat loads skip Spark's
+schema-inference job while a regenerated file is still re-inferred.
 """
 
 from __future__ import annotations
@@ -41,31 +40,38 @@ TESTDATA_TABLES = (
 # decides their join strategy.
 BROADCASTABLE_TABLES = frozenset({"region", "nation"})
 
-# Optional per-session table cache for the driver's correctness sweep:
-# it runs ~90 queries back-to-back on the same tiny (sf≤0.01) tables,
-# so re-scanning parquet per query is pure fixed cost. OFF by default
-# (tests assert parquet-scan plan shapes like PushedFilters; bench
-# keeps scans honest); __spark_entry__ turns it on for the driver.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_TABLE_CACHE_ENABLED = False
+
+def _data_files(path: str) -> list[str]:
+    """The parquet data files of a local dataset, in a deterministic
+    order: the file itself, or every *.parquet under a directory at any
+    depth (Hive partition subdirectories included), skipping
+    hidden/underscore entries (_SUCCESS, .crc, _temporary)."""
+    if os.path.isfile(path):
+        return [path]
+    files = []
+    for root, dirs, fnames in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+        files += [
+            os.path.join(root, f)
+            for f in sorted(fnames)
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
+    return files
 
 
-def enable_table_cache(enabled: bool = True) -> None:
-    """Cache load_table results per (session, sf_dir, table).
-
-    Only sane for small scale factors (the cached frames pin memory);
-    the driver's sf0.01 correctness sweep is the intended user.
-    Disabling unpersists live cached frames and clears the map.
-    """
-    global _TABLE_CACHE_ENABLED
-    _TABLE_CACHE_ENABLED = enabled
-    if not enabled:
-        for df in _TABLE_CACHE.values():
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 — session may already be gone
-                pass
-        _TABLE_CACHE.clear()
+def _freshness(path: str) -> tuple | None:
+    """(file, mtime_ns, size) of every data file under ``path``: the
+    version key of the metadata memos below. Any rewrite of a data
+    file, nested partition files included, changes it. None for a path
+    that is not local (remote URI) or vanishes mid-listing: never
+    memoize what cannot be re-checked."""
+    if not os.path.exists(path):
+        return None
+    try:
+        stats = [(f, os.stat(f)) for f in _data_files(path)]
+    except OSError:
+        return None
+    return tuple((f, st.st_mtime_ns, st.st_size) for f, st in stats)
 
 
 def _parquet_ts_is_nanos(path: str) -> bool:
@@ -85,25 +91,10 @@ def _parquet_ts_is_nanos(path: str) -> bool:
     try:
         import pyarrow.parquet as pq
 
-        probe = path
-        if os.path.isdir(path):
-            probe = None
-            for root, dirs, files in os.walk(path):
-                # deterministic first-file choice; skip _SUCCESS/.crc
-                dirs[:] = sorted(
-                    d for d in dirs if not d.startswith((".", "_"))
-                )
-                parts = sorted(
-                    f
-                    for f in files
-                    if f.endswith(".parquet") and not f.startswith((".", "_"))
-                )
-                if parts:
-                    probe = os.path.join(root, parts[0])
-                    break
-            if probe is None:
-                return False
-        return "ns" in str(pq.read_schema(probe).field("ts").type)
+        files = _data_files(path)
+        if not files:
+            return False
+        return "ns" in str(pq.read_schema(files[0]).field("ts").type)
     except Exception:  # noqa: BLE001 — absent field/file: let Spark decide
         return False
 
@@ -175,11 +166,10 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 #     under task retries for free;
 #   * the probe fires only when the dataset physically cannot fill
 #     the machine: a dataset with >= cores files never reads footers
-#     (at real scale the branch exits on the file count, so driver
-#     listing stays bounded), and the remaining < cores files must
-#     hold < cores TOTAL row groups; tiny inputs
-#     (< SPARK_GRAFT_REBALANCE_MIN_BYTES, default 256 KiB) stay
-#     serial — a shuffle would cost more than the scan.
+#     (the freshness listing is only local os.stat calls), and the
+#     remaining < cores files must hold < cores TOTAL row groups;
+#     tiny inputs (< SPARK_GRAFT_REBALANCE_MIN_BYTES, default 256 KiB)
+#     stay serial — a shuffle would cost more than the scan.
 # The partition count is defaultParallelism (NOT a constant), so the
 # driver's lower-core scaling runs get proportionally fewer
 # partitions. Catalyst pushes filters and column pruning THROUGH
@@ -197,60 +187,75 @@ def _rebalance_partitions(path: str, cores: int) -> int | None:
     """Partition count to hash-repartition an unsplittable local
     parquet dataset to (the caller supplies the key column), or None
     to leave the scan alone. Metadata-only; result memoized per
-    (path, cores, min_bytes, freshness) where freshness is the root
-    stat's (mtime_ns, size) — one extra stat per call, and a dataset
-    REWRITTEN at the same path (testdata regen, load_table over a
-    mutable store) re-probes instead of silently applying a stale
-    decision (r16 advice: the old memo keyed on path alone and never
-    invalidated). Any write that lands/moves files under the root
-    updates the directory mtime; an in-place single-file rewrite
-    updates the file's own."""
+    (path, cores, min_bytes, _freshness(path)), so a dataset rewritten
+    at the same path (testdata regen, an in-place rewrite of a nested
+    partition file) re-probes instead of applying a stale decision."""
     min_bytes = int(
         os.environ.get("SPARK_GRAFT_REBALANCE_MIN_BYTES", str(256 * 1024))
     )
-    try:
-        st = os.stat(path)
-        fresh = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        fresh = None
+    fresh = _freshness(path)
     key = (path, cores, min_bytes, fresh)
     if key in _REBALANCE_PROBE_CACHE:
         return _REBALANCE_PROBE_CACHE[key]
     result: int | None = None
     try:
-        if min_bytes >= 0:  # negative disables the rebalance entirely
-            if os.path.isfile(path):
-                files = [path]
-            else:
-                files = []
-                for root, dirs, fnames in os.walk(path):
-                    dirs[:] = sorted(
-                        d for d in dirs if not d.startswith((".", "_"))
-                    )
-                    files += [
-                        os.path.join(root, f)
-                        for f in sorted(fnames)
-                        if f.endswith(".parquet")
-                        and not f.startswith((".", "_"))
-                    ]
-                    if len(files) >= cores:
-                        break
-            if 0 < len(files) < cores:
-                import pyarrow.parquet as pq
+        # negative min_bytes disables the rebalance entirely
+        if min_bytes >= 0 and fresh and len(fresh) < cores:
+            import pyarrow.parquet as pq
 
-                units = 0
-                nbytes = 0
-                for f in files:
-                    units += pq.ParquetFile(f).metadata.num_row_groups
-                    nbytes += os.path.getsize(f)
-                    if units >= cores:
-                        break
-                if units < cores and nbytes >= min_bytes:
-                    result = cores
-    except Exception:  # noqa: BLE001 — remote URI / odd footer: let Spark scan as-is
+            units = 0
+            for f, _, _ in fresh:
+                units += pq.ParquetFile(f).metadata.num_row_groups
+                if units >= cores:
+                    break
+            if units < cores and sum(size for _, _, size in fresh) >= min_bytes:
+                result = cores
+    except Exception:  # noqa: BLE001 — odd footer: let Spark scan as-is
         result = None
     _REBALANCE_PROBE_CACHE[key] = result
     return result
+
+
+# Inferred testdata schemas, keyed on (path, nanosAsLong flag,
+# _freshness(path)). spark.read.parquet(path) without a schema runs a
+# schema-inference Spark job on EVERY call to re-read a footer that has
+# not changed; handing the memoized schema to the reader skips that job
+# and still builds a fresh relation (self-joins keep distinct exprIds).
+# A rewritten file changes the freshness key and is re-inferred, so the
+# schema is always what the current footer says.
+_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
+_NANOS_FLAG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Raw parquet scan of one testdata table (events.ts not yet
+    normalized), its schema inferred once per file version."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    # Set the legacy-nanos flag ONLY when the footer really is
+    # TIMESTAMP(NANOS): setting it unconditionally changed how every
+    # later parquet read in the shared session decodes nanos columns
+    # (bigint instead of error/timestamp). For a legacy file the flag
+    # must stay set for the frame's lifetime (the scan consults it at
+    # execution, not at read()).
+    if name == "events" and _parquet_ts_is_nanos(path):
+        spark.conf.set(_NANOS_FLAG, "true")
+    fresh = _freshness(path)
+    key = (path, spark.conf.get(_NANOS_FLAG, "false"), fresh)
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if fresh:
+        _SCHEMA_MEMO[key] = df.schema
+    return df
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """Raw schema of one testdata table, as the batch loader resolves
+    it (events.ts: LongType for a TIMESTAMP(NANOS) footer,
+    TimestampNTZType for MICROS). The streaming file source, which
+    needs its schema up front, takes it from here."""
+    return _read_table(spark, sf_dir, name).schema
 
 
 def load_table(
@@ -275,55 +280,24 @@ def load_table(
     # The engine's time semantics are UTC (SURVEY.md §1.2); pin it even
     # when the caller's session was built elsewhere (e.g. the driver).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # applicationId (not id(sc)) keys the cache: a stopped+rebuilt
-    # context gets a fresh app id, while a reused CPython address
-    # would silently hand back frames bound to the dead JVM context.
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-
-    def _with_scan_parallel(frame: DataFrame) -> DataFrame:
-        if scan_parallel_key is None:
-            return frame
-        # applied ABOVE the cache entry: the cache holds the raw scan
-        # (shared by every query of the table), the rebalance only
-        # shapes this caller's plan
-        from pyspark.sql import functions as F
-
-        n_parts = _rebalance_partitions(
-            path, spark.sparkContext.defaultParallelism
-        )
-        if n_parts is None:
-            return frame
-        return frame.repartition(n_parts, F.col(scan_parallel_key))
-
-    if _TABLE_CACHE_ENABLED and key in _TABLE_CACHE:
-        return _with_scan_parallel(_TABLE_CACHE[key])
+    df = _read_table(spark, sf_dir, name)
     if name == "events":
-        # Set the legacy-nanos flag ONLY when the footer really is
-        # TIMESTAMP(NANOS): setting it unconditionally changed how
-        # every later parquet read in the shared session decodes
-        # nanos columns (bigint instead of error/timestamp). For a
-        # legacy file the flag must stay set for the frame's lifetime
-        # (the scan consults it at execution, not at read()).
-        if _parquet_ts_is_nanos(path):
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = normalize_event_ts(spark.read.parquet(path))
-    else:
-        df = spark.read.parquet(path)
-    if _TABLE_CACHE_ENABLED:
-        df = df.cache()
-        _TABLE_CACHE[key] = df
-    return _with_scan_parallel(df)
+        df = normalize_event_ts(df)
+    if scan_parallel_key is None:
+        return df
+    from pyspark.sql import functions as F
+
+    n_parts = _rebalance_partitions(
+        os.path.join(sf_dir, f"{name}.parquet"),
+        spark.sparkContext.defaultParallelism,
+    )
+    if n_parts is None:
+        return df
+    return df.repartition(n_parts, F.col(scan_parallel_key))
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name in TESTDATA_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 # ---------------------------------------------------------------------------

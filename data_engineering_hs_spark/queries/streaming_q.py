@@ -18,42 +18,6 @@ from data_engineering_hs_spark.streaming.pipelines import (
     tumbling_counts,
 )
 
-def _events_raw_ts_type(sf_dir: str) -> T.DataType:
-    """Physical `ts` type of this generation's events.parquet.
-
-    The streaming file source needs the schema declared up front, and
-    the driver has shipped events.ts as both TIMESTAMP(NANOS) (long
-    under nanosAsLong) and TIMESTAMP(MICROS) (TIMESTAMP_NTZ) across
-    rounds — read the footer instead of guessing.
-    """
-    import os
-
-    import pyarrow.parquet as pq
-
-    arrow_t = (
-        pq.read_schema(os.path.join(sf_dir, "events.parquet"))
-        .field("ts")
-        .type
-    )
-    if str(arrow_t) == "int64" or "ns" in str(arrow_t):
-        return T.LongType()  # nanos (nanosAsLong)
-    if getattr(arrow_t, "tz", None):
-        return T.TimestampType()
-    return T.TimestampNTZType()
-
-
-def _events_raw_schema(sf_dir: str) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", _events_raw_ts_type(sf_dir)),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
 
 def _stream_dir_for(sf_dir: str, table: str) -> str:
     """The streaming file source requires a directory; testdata tables
@@ -103,20 +67,13 @@ def _work_dir(tag: str, sf_dir: str) -> str:
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from data_engineering_hs_spark.catalog import (
-        _parquet_ts_is_nanos,
-        normalize_event_ts,
-    )
+    from data_engineering_hs_spark.catalog import normalize_event_ts, table_schema
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # legacy-nanos flag only when the footer really is NANOS — the
-    # unconditional session-wide set was exactly the leak
-    # catalog.load_table documents and guards against
-    if _parquet_ts_is_nanos(os.path.join(sf_dir, "events.parquet")):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.readStream.schema(_events_raw_schema(sf_dir)).parquet(
+    # the file source needs its schema up front: take the batch
+    # loader's (which also sets the legacy-nanos flag for a NANOS
+    # footer), so batch and stream resolve events.ts the same way
+    raw = spark.readStream.schema(table_schema(spark, sf_dir, "events")).parquet(
         _stream_dir_for(sf_dir, "events")
     )
     return normalize_event_ts(raw)

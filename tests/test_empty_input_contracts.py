@@ -154,13 +154,6 @@ class TestEmptyInputOps:
                 )
         return d
 
-    @pytest.fixture(autouse=True)
-    def _no_table_cache(self):
-        from data_engineering_hs_spark.catalog import enable_table_cache
-
-        enable_table_cache(False)
-        yield
-
 
 class TestNoOverlapBuildIsLoudPreWrite:
     """r15, ADVICE: the residual zero-row cause — nonempty corpus AND

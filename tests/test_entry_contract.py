@@ -28,15 +28,6 @@ def test_measured_table_has_no_stale_names():
     assert set(E._MEASURED_SEC) <= set(REGISTRY)
 
 
-def test_import_does_not_enable_table_cache():
-    # the cache must switch on only when a driver callable RUNS —
-    # an import-time enable leaks InMemoryRelations into every later
-    # test module and breaks the parquet plan-shape assertions
-    from data_engineering_hs_spark import catalog
-
-    assert not catalog._TABLE_CACHE_ENABLED
-
-
 def test_oracle_hash_sidecar_certifies_current_text():
     # ORACLE_HASHES.json certifies (query, oracle-text) pairs: a name
     # counts driver-verified only when its stamped hash matches the

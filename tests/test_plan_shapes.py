@@ -5,23 +5,11 @@ Checked at sf0.01 (plan shapes don't change with SF for these)."""
 
 from __future__ import annotations
 
-import pytest
-
 from data_engineering_hs_spark.plans.inspect import plan_string, plan_summary
 from data_engineering_hs_spark.queries import REGISTRY, load_all
 from tests.conftest import SF001
 
 load_all()
-
-
-@pytest.fixture(autouse=True)
-def _raw_scans():
-    # plan assertions require real parquet scans — force the
-    # driver-path table cache off regardless of test ordering
-    from data_engineering_hs_spark.catalog import enable_table_cache
-
-    enable_table_cache(False)
-    yield
 
 
 def _plan(spark, name: str) -> str:

@@ -100,6 +100,22 @@ def test_probe_refreshes_when_file_rewritten(tmp_path):
     assert _rebalance_partitions(p, 8) is None
 
 
+def test_probe_refreshes_when_nested_partition_file_rewritten(tmp_path):
+    # an in-place rewrite of root/p=x/part.parquet leaves the root
+    # directory's own stat untouched: the memo must key on every data
+    # file's freshness, not on the root
+    root = tmp_path / "partitioned"
+    (root / "p=x").mkdir(parents=True)
+    f = str(root / "p=x" / "part.parquet")
+    _write_parquet(f, 4000, 4000)
+    root_stat = os.stat(root)
+    assert _rebalance_partitions(str(root), 8) == 8
+    _write_parquet(f, 4000, 500)  # now 8 row groups: probe should skip
+    os.utime(f, ns=(1, 1))
+    assert os.stat(root).st_mtime_ns == root_stat.st_mtime_ns
+    assert _rebalance_partitions(str(root), 8) is None
+
+
 @pytest.mark.usefixtures("spark")
 def test_load_table_opt_in_spreads_rows_and_keeps_values(spark):
     base = load_table(spark, SF_DIR, "lineitem")

@@ -353,9 +353,7 @@ class TestEventsLoaderEncodings:
         import pyarrow.parquet as pq
         from pyspark.sql import types as T
 
-        from data_engineering_hs_spark.queries.streaming_q import (
-            _events_raw_ts_type,
-        )
+        from data_engineering_hs_spark.catalog import table_schema
 
         micros = [1704067200_000_000]
         for unit, expect in (
@@ -371,7 +369,8 @@ class TestEventsLoaderEncodings:
                 coerce_timestamps=None,
                 version="2.6",
             )
-            assert _events_raw_ts_type(str(d)) == expect, unit
+            got = table_schema(spark, str(d), "events")["ts"].dataType
+            assert got == expect, unit
 
 
 class TestCompaction:
