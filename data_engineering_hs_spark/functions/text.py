@@ -224,21 +224,24 @@ def char_ngrams(c: ColumnOrName, n: int = 5) -> Column:
     )
 
 
-# Version of the content-identity normalization (normalized_text /
-# fingerprint64 / tokens): v1 = pre-r13 (trim-before-collapse, phantom
-# ''-tokens at whitespace edges), v2 = r13 semantics (collapse-then-
-# trim, non-empty tokens only). Fingerprints PERSISTED by the
+# Version of EVERY persisted hash scheme — not only the
+# tokens()/normalized_text() output, but everything derived from it
+# that a store keeps: exact fingerprints (fingerprint64), SimHash and
+# winnow values, and MinHash band buckets. Hashes PERSISTED by the
 # incremental dedup / LSH stores are only comparable within one
-# version — a store built under v1 re-admits previously-seen docs
-# whose text has tab/newline edges, silently. Store commits stamp
-# this constant beside the data and reads fail loudly on mismatch
-# (operators.dedup.check_normalization_version). BUMP IT whenever
-# tokens()/normalized_text() semantics change.
-# v3 = r17 band-bucket hash change: lsh_band_buckets hashes the r
-# signature longs directly instead of a concat_ws string of their
-# decimal renderings — pair outputs are unchanged, but persisted
-# band-store BUCKET VALUES are not comparable across the schemes, the
-# exact store-poisoning this stamp exists to catch.
+# version: a store built under another version silently re-admits
+# previously-seen docs. Store commits stamp this constant beside the
+# data and reads fail loudly on mismatch
+# (operators.dedup.check_normalization_version). BUMP IT whenever any
+# of those schemes changes; a bump invalidates every stamped store,
+# including the ones whose own scheme did not change (one version,
+# not one per scheme).
+# v1 = pre-r13 (trim-before-collapse, phantom ''-tokens at whitespace
+# edges); v2 = r13 (collapse-then-trim, non-empty tokens only);
+# v3 = r17 band-bucket hash: lsh_band_buckets hashes the r signature
+# longs directly instead of a concat_ws string of their decimal
+# renderings — pair outputs are unchanged, but persisted band-store
+# BUCKET VALUES are not comparable across the schemes.
 NORMALIZATION_VERSION = 3
 
 

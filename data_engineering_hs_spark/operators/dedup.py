@@ -38,6 +38,13 @@ from data_engineering_hs_spark.functions.text import (  # noqa: F401 — normali
     tokens,
     word_shingles,
 )
+from data_engineering_hs_spark.sources.parquet import (
+    local_store_path,
+    read_parquet_if_exists,
+    read_sidecar,
+    store_writer_lease,
+    write_sidecar,
+)
 
 
 def dup_groups(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
@@ -725,47 +732,7 @@ def incremental_exact_dedup(
     )
 
 
-def _read_parquet_if_exists(spark, path: str) -> DataFrame | None:
-    """spark.read.parquet(path), or None when the dataset doesn't
-    exist yet. Existence is decided by SPARK'S filesystem resolution,
-    not driver-local os.path: an os.path.exists probe reports False
-    for every non-local URI (s3a://, hdfs://, abfs://), which made
-    the incremental stores silently treat a populated remote store as
-    "no store yet" — every previously-seen document then survives
-    dedup and its fingerprint is committed twice. An existing but
-    EMPTY directory (created, no increment committed) also reads as
-    None — same "no store yet" semantics."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        msg = str(e)
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        ):
-            return None
-        raise
-
-
 _NORM_META = "_norm_meta.json"
-
-
-def _norm_meta_file(path: str) -> str | None:
-    """Driver-local sidecar path for the normalization stamp, or None
-    for remote URIs (where the stamp degrades to the documented
-    rebuild-on-semantics-change contract, like similarity's
-    _store_meta sidecar)."""
-    import os
-
-    from data_engineering_hs_spark.operators.similarity import (
-        _local_store_dir,
-    )
-
-    local = _local_store_dir(path)
-    return None if local is None else os.path.join(local, _NORM_META)
 
 
 def check_normalization_version(path: str) -> None:
@@ -779,17 +746,14 @@ def check_normalization_version(path: str) -> None:
     A store WITHOUT a stamp (pre-r14, or remote URI) passes — it
     cannot be distinguished from a fresh one; pre-r13 stores must be
     rebuilt (documented contract). Driver-side file read only."""
-    import json
-    import os
-
     from data_engineering_hs_spark.functions.text import (
         NORMALIZATION_VERSION,
     )
 
-    meta = _norm_meta_file(path)
-    if meta is None or not os.path.exists(meta):
+    meta = read_sidecar(path, _NORM_META)
+    if meta is None:
         return
-    recorded = json.load(open(meta)).get("normalization_version")
+    recorded = meta.get("normalization_version")
     if recorded != NORMALIZATION_VERSION:
         raise RuntimeError(
             f"store {path} was built with normalization_version="
@@ -807,23 +771,22 @@ def stamp_normalization_version(path: str) -> None:
     commit into a store built under an older version aborts instead
     of mixing incomparable fingerprints. Best-effort for remote URIs
     (no sidecar), strict for driver-local paths."""
-    import json
+    import os
 
     from data_engineering_hs_spark.functions.text import (
         NORMALIZATION_VERSION,
     )
 
-    import os
-
     check_normalization_version(path)
-    meta = _norm_meta_file(path)
-    if meta is None:
+    local = local_store_path(path)
+    if local is None:
         return
     # first increment: the store dir may not exist yet (Spark would
     # create it); append-mode writes into a pre-created dir are fine
-    os.makedirs(os.path.dirname(meta), exist_ok=True)
-    with open(meta, "w") as fh:
-        json.dump({"normalization_version": NORMALIZATION_VERSION}, fh)
+    os.makedirs(local, exist_ok=True)
+    write_sidecar(
+        path, _NORM_META, {"normalization_version": NORMALIZATION_VERSION}
+    )
 
 
 def read_fingerprint_store(spark, path: str) -> DataFrame | None:
@@ -833,7 +796,7 @@ def read_fingerprint_store(spark, path: str) -> DataFrame | None:
     Raises if the store carries a mismatched normalization stamp
     (check_normalization_version)."""
     check_normalization_version(path)
-    return _read_parquet_if_exists(spark, path)
+    return read_parquet_if_exists(spark, path)
 
 
 def append_fingerprints(survivors: DataFrame, path: str) -> None:
@@ -849,19 +812,9 @@ def append_fingerprints(survivors: DataFrame, path: str) -> None:
     parquet read samples ONE footer to infer the directory schema —
     which footer wins is file-order roulette, so the store would read
     correctly or throw depending on listing order. The cast makes
-    every committed file bigint regardless of caller dtype.
-
-    SINGLE-WRITER (enforced, r16): the commit runs under
-    store_writer_lease — two racing appends of a 100-row increment
-    were probed to leave 197 rows (duplicates AND lost task files,
-    because both jobs share `path/_temporary` and one committer's
-    cleanup deletes the other's in-flight output). A second writer
-    now raises ConcurrentWriterError instead. Remote store URIs have
-    no flock — there the contract is this paragraph."""
-    from data_engineering_hs_spark.sources.parquet import (
-        store_writer_lease,
-    )
-
+    every committed file bigint regardless of caller dtype. The
+    stamp and commit run under store_writer_lease
+    (ConcurrentWriterError)."""
     with store_writer_lease(path, "append_fingerprints"):
         stamp_normalization_version(path)
         survivors.select(
@@ -1046,7 +999,7 @@ def read_lsh_store(spark, path: str) -> DataFrame | None:
     shingles of tokens(), so the r13 token fix re-buckets the same
     text (check_normalization_version)."""
     check_normalization_version(path)
-    return _read_parquet_if_exists(spark, path)
+    return read_parquet_if_exists(spark, path)
 
 
 def append_lsh_bands(new_bands: DataFrame, path: str) -> None:
@@ -1060,69 +1013,51 @@ def append_lsh_bands(new_bands: DataFrame, path: str) -> None:
     schema instead — a drifted increment (renamed id, widened type)
     would otherwise append a mixed-schema parquet directory whose
     read either null-fills or type-errors depending on which footer
-    Spark happens to sample. Loud beats roulette.
-
-    SINGLE-WRITER (enforced, r16): stamp, drift-check, and commit all
-    run under store_writer_lease — the drift check is only sound if
-    the store cannot change between the check and the write, and
-    racing appends double-commit AND lose in-flight task files
-    (shared `path/_temporary`; see append_fingerprints). A second
-    writer raises ConcurrentWriterError. Remote store URIs have no
-    flock — there the contract is this paragraph."""
-    from data_engineering_hs_spark.sources.parquet import (
-        store_writer_lease,
-    )
-
+    Spark happens to sample. Loud beats roulette. Stamp, drift check
+    and commit all run under store_writer_lease
+    (ConcurrentWriterError): the drift check is only sound if the
+    store cannot change between the check and the write."""
     with store_writer_lease(path, "append_lsh_bands"):
-        _append_lsh_bands_locked(new_bands, path)
+        stamp_normalization_version(path)
+        out = new_bands.select(
+            *[
+                F.col(c).cast("int").alias(c)
+                if c == "band"
+                else F.col(c).cast("long").alias(c)
+                if c == "bucket"
+                else F.col(c)
+                for c in new_bands.columns
+            ]
+        )
+        from data_engineering_hs_spark.operators.similarity import (
+            erase_nullability,
+        )
 
-
-def _append_lsh_bands_locked(new_bands: DataFrame, path: str) -> None:
-    stamp_normalization_version(path)
-    out = new_bands.select(
-        *[
-            F.col(c).cast("int").alias(c)
-            if c == "band"
-            else F.col(c).cast("long").alias(c)
-            if c == "bucket"
-            else F.col(c)
-            for c in new_bands.columns
-        ]
-    )
-    from pyspark.errors import AnalysisException
-
-    from data_engineering_hs_spark.operators.similarity import (
-        erase_nullability,
-    )
-
-    try:
-        existing = out.sparkSession.read.parquet(path).schema
-    except AnalysisException:
-        # nonexistent or empty store — first append, nothing to
-        # drift against. Probing by read (not listdir) keeps the
-        # check live for remote URIs (s3a://, hdfs://) too, where
-        # the old local-dir probe silently skipped it.
-        existing = None
-    if existing is not None:
-        # nullability erased recursively: a parquet-read schema is
-        # all-nullable while computed columns (posexplode's band,
-        # containsNull=false arrays) are not, and the flags don't
-        # affect the footer layout (the d61c2ab false-positive class,
-        # handled by the same shared helper as append_to_cell_store)
-        want = [(f.name, erase_nullability(f.dataType))
-                for f in existing.fields]
-        got = [(f.name, erase_nullability(f.dataType))
-               for f in out.schema.fields]
-        if want != got:
-            raise ValueError(
-                f"band-store schema drift: store at {path} holds "
-                f"{existing.simpleString()} but this increment "
-                f"carries {out.schema.simpleString()} — appending "
-                "would create a mixed-schema directory whose read "
-                "depends on which file's footer Spark samples. Align "
-                "the increment's columns or rebuild the store."
-            )
-    out.write.mode("append").parquet(path)
+        # nonexistent or empty store: first append, nothing to drift
+        # against. Probing by read (not listdir) keeps the check live for
+        # remote URIs (s3a://, hdfs://) too.
+        store = read_parquet_if_exists(out.sparkSession, path)
+        if store is not None:
+            existing = store.schema
+            # nullability erased recursively: a parquet-read schema is
+            # all-nullable while computed columns (posexplode's band,
+            # containsNull=false arrays) are not, and the flags don't
+            # affect the footer layout (the d61c2ab false-positive class,
+            # handled by the same shared helper as append_to_cell_store)
+            want = [(f.name, erase_nullability(f.dataType))
+                    for f in existing.fields]
+            got = [(f.name, erase_nullability(f.dataType))
+                   for f in out.schema.fields]
+            if want != got:
+                raise ValueError(
+                    f"band-store schema drift: store at {path} holds "
+                    f"{existing.simpleString()} but this increment "
+                    f"carries {out.schema.simpleString()} — appending "
+                    "would create a mixed-schema directory whose read "
+                    "depends on which file's footer Spark samples. Align "
+                    "the increment's columns or rebuild the store."
+                )
+        out.write.mode("append").parquet(path)
 
 
 def commit_lsh_bands_bucketed(

@@ -10,10 +10,19 @@ Scale: dynamic partition overwrite replaces only touched partitions
 (the incremental materialization primitive used by plans.model_dag);
 sortWithinPartitions gives MergeTree-style clustering for read
 locality (fct_orders.sql:13-15 order_by analog).
+
+This module is also the one owner of the path-based store lifecycle
+every store family (fingerprint, band, cell, ingest, CDC table) uses:
+the writer lease, the rewrite-and-swap with its recovery, and the
+JSON sidecars kept beside the data.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
+import os
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,11 +60,53 @@ def read_pruned(
     return df
 
 
+def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    """spark.read.parquet(path), or None when the dataset doesn't
+    exist yet — the one absent-store probe of the incremental stores
+    and the upsert sink. Existence is decided by SPARK'S filesystem
+    resolution, not driver-local os.path: an os.path.exists probe
+    reports False for every non-local URI (s3a://, hdfs://, abfs://),
+    which made a populated remote store read as "no store yet" — every
+    previously-seen document then survives dedup (or every replayed
+    upsert appends) twice. An existing but EMPTY directory (created,
+    no increment committed) also reads as None. Any other analysis
+    error (e.g. conflicting directory structures) propagates."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        msg = str(e)
+        if (
+            "PATH_NOT_FOUND" in msg
+            or "Path does not exist" in msg
+            or "UNABLE_TO_INFER_SCHEMA" in msg
+        ):
+            return None
+        raise
+
+
+def local_store_path(path: str) -> str | None:
+    """Driver-local directory of a store `path`: schemeless paths
+    unchanged, ``file://`` URIs with the scheme stripped (Spark's
+    writers accept them, plain open()/os.path do not), None for remote
+    URIs (s3a://, hdfs://, …) where the driver has no POSIX view. The
+    lease file and every sidecar are located through this one rule."""
+    from urllib.parse import urlparse
+
+    parsed = urlparse(path)
+    if parsed.scheme == "":
+        return path
+    if parsed.scheme == "file":
+        return parsed.path or "/"
+    return None
+
+
 def _require_local_swap_path(path: str, op: str) -> None:
     """The rename-aside swap (swap_in/recover_swap) is POSIX os.replace
     and the file listings are os.listdir — reject URI paths up front
-    (streaming_cdc_apply pattern) instead of dying mid-protocol with a
-    confusing FileNotFoundError after work was already done."""
+    instead of dying mid-protocol with a confusing FileNotFoundError
+    after work was already done."""
     from urllib.parse import urlparse
 
     if urlparse(path).scheme:
@@ -71,14 +122,24 @@ def _require_local_swap_path(path: str, op: str) -> None:
 class ConcurrentWriterError(RuntimeError):
     """Another process/thread holds the writer lease on this store.
 
-    The path-based persistent stores (fingerprint, LSH-band, cell
-    stores and their compactions) are SINGLE-WRITER: the r16 race
-    probe showed two barrier-released appends of a 100-row increment
-    leave 197 rows — duplicates from the double-commit AND rows LOST
-    outright, because both jobs share `path/_temporary` and one
-    FileOutputCommitter's cleanup deletes the other's in-flight task
-    files. Serialize your writers; this error is the loud form of
-    that contract."""
+    Every path-based persistent store (fingerprint, LSH-band, cell and
+    ingest stores, and the tables the rewrite-and-swap ops maintain)
+    is SINGLE-WRITER. The r16 race probe showed two barrier-released
+    appends of a 100-row increment leave 197 rows — duplicates from
+    the double-commit AND rows LOST outright, because both jobs share
+    `path/_temporary` and one FileOutputCommitter's cleanup deletes
+    the other's in-flight task files; an append racing a compaction
+    lands its files in the directory the swap then parks and deletes.
+    So every mutator runs its whole read-check-write sequence under
+    store_writer_lease, and a second writer gets this error up front
+    instead of a torn store. The staged-snapshot checks of the
+    rewrite-and-swap (rewrite_store) stay as a tripwire for writers
+    that bypass the mutators — notably streaming_dedup_ingest's batch
+    commit, which is deliberately unleased (failing a production batch
+    in favor of maintenance would be backwards). Remote store URIs
+    have no flock: there this paragraph is the contract (a
+    transactional table format or conditional puts are the real
+    mechanism at that layer). Serialize your writers."""
 
 
 LEASE_SUFFIX = ".__lease"
@@ -87,48 +148,34 @@ LEASE_SUFFIX = ".__lease"
 def _lease_file(path: str) -> str | None:
     """Sibling lease file for a store path (survives the rename-aside
     swap, which renames the store DIRECTORY), or None for remote URIs
-    where POSIX flock doesn't exist — there the single-writer
-    contract is documented-only (a transactional table format or
-    S3 conditional puts are the real mechanism at that layer)."""
-    from urllib.parse import urlparse
-
-    parsed = urlparse(path)
-    if parsed.scheme == "":
-        local = path
-    elif parsed.scheme == "file":
-        local = parsed.path or "/"
-    else:
-        return None
-    return local.rstrip("/") + LEASE_SUFFIX
+    where POSIX flock doesn't exist."""
+    local = local_store_path(path)
+    return None if local is None else local.rstrip("/") + LEASE_SUFFIX
 
 
 def store_writer_lease(path: str, op: str):
     """Exclusive writer lease for a path-based store — the
-    enforcement half of the single-writer contract (the staged-
-    snapshot checks in swap_in remain as a tripwire against writers
-    that bypass the mutators).
+    enforcement half of the single-writer contract (see
+    ConcurrentWriterError).
 
     POSIX `flock(LOCK_EX | LOCK_NB)` on a sibling `<path>.__lease`
     file: kernel-owned, so a crashed writer's lease releases the
     moment its process dies — no stale-TTL takeover logic, no
     leftover lock to clean up. flock conflicts between two open file
     descriptions even within one process, so two threads of one
-    driver are serialized the same as two drivers. A held lease makes
-    the SECOND writer raise ConcurrentWriterError immediately
-    (fail-loud, not queue: the blocked writer's increment would
-    otherwise commit after an arbitrarily long silent wait, and for
-    compaction-vs-append the right answer is 'retry after the
-    maintenance window', a caller decision).
+    driver are serialized the same as two drivers (and a lease must
+    never be nested on one path). A held lease makes the SECOND
+    writer raise ConcurrentWriterError immediately (fail-loud, not
+    queue: the blocked writer's increment would otherwise commit
+    after an arbitrarily long silent wait, and for compaction-vs-
+    append the right answer is 'retry after the maintenance window',
+    a caller decision).
 
-    Remote store URIs (s3a://, hdfs://) yield WITHOUT enforcement —
-    flock has no remote analog; the contract there is documented on
-    every mutator. Context manager; the lease file itself is
-    leading-punctuation-named so every data-file listing
-    (snapshot_data_files, the parquet scan) already ignores it."""
-    import contextlib
+    Remote store URIs (s3a://, hdfs://) yield WITHOUT enforcement.
+    Context manager; the lease file itself is leading-punctuation-
+    named so every data-file listing (snapshot_data_files, the
+    parquet scan) already ignores it."""
     import fcntl
-    import json
-    import os
     import time
 
     @contextlib.contextmanager
@@ -175,6 +222,72 @@ def store_writer_lease(path: str, op: str):
     return _lease()
 
 
+@contextlib.contextmanager
+def swap_lease(path: str, op: str):
+    """The lease of a rewrite-and-swap op: reject URI paths up front
+    (the swap is POSIX renames), then hold store_writer_lease over the
+    op's whole body — listing, staging read, rewrite and swap."""
+    _require_local_swap_path(path, op)
+    with store_writer_lease(path, op):
+        yield
+
+
+def read_sidecar(path: str, name: str) -> dict | None:
+    """The store's `name` sidecar — a leading-underscore JSON file
+    beside the data, invisible to the parquet scan — or None when the
+    store has none or is remote (callers treat None as the
+    pre-sidecar contract and skip their check)."""
+    local = local_store_path(path)
+    if local is None:
+        return None
+    try:
+        with open(os.path.join(local, name)) as fh:
+            return json.load(fh)
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+
+
+def write_sidecar(path: str, name: str, payload: dict) -> None:
+    """Write the store's `name` sidecar atomically (tmp file, then
+    os.replace): a crash mid-write leaves the previous sidecar, never a
+    truncated file the next read would fail on. Skipped for remote
+    URIs (the documented degradation). On a driver-local path —
+    file:// included — an OSError PROPAGATES: swallowing it would
+    silently disable the check the sidecar feeds."""
+    local = local_store_path(path)
+    if local is None:
+        return
+    target = os.path.join(local, name)
+    with open(target + ".tmp", "w") as fh:
+        json.dump(payload, fh, indent=0, sort_keys=True)
+    os.replace(target + ".tmp", target)
+
+
+def data_files(path: str, recursive: bool = True) -> list[str]:
+    """Paths of the parquet data files under the store directory
+    `path` — the one file counter behind the rewrite ops' stats.
+    ``recursive=False`` lists top-level files only. Skips `_`/`.`
+    names (_SUCCESS, .crc, _temporary, sidecars); a missing `path`
+    raises FileNotFoundError. (snapshot_data_files deliberately keeps
+    _temporary in view instead: the tripwire must see in-flight
+    commits.)"""
+
+    def fail(err: OSError) -> None:
+        raise err
+
+    out = []
+    for root, dirs, files in os.walk(path.rstrip("/"), onerror=fail):
+        dirs[:] = [
+            d for d in dirs if recursive and not d.startswith(("_", "."))
+        ]
+        out += [
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+    return out
+
+
 # Test seam for the pre-swap tripwire: called (with the store path)
 # just before the concurrent-writer check so a test can deterministically
 # inject a "commit" into the race window. Never set in production.
@@ -193,8 +306,6 @@ def snapshot_data_files(path: str) -> frozenset:
     names are unique per Spark write (UUIDs), so ANY concurrent
     commit — new partition or append into an existing one — changes
     this set."""
-    import os
-
     norm = path.rstrip("/")
     out = set()
     for root, _dirs, files in os.walk(norm):
@@ -209,15 +320,12 @@ def check_no_concurrent_writer(
     path: str, staged: frozenset, op: str, tmp: str | None = None
 ) -> None:
     """Abort the swap if the live store changed since the staging
-    read. The compaction family documents 'never concurrent with an
-    active trigger's commit', but without this check a batch committed
-    between the staging read and the rename SILENTLY VANISHES in the
-    swap — the one data-loss shape the rename-aside protocol cannot
-    see on its own. Cheap (one os.walk) relative to the rewrite it
-    guards. On trip: the staged tmp copy is deleted and the live
-    store is left untouched."""
-    import shutil
-
+    read. Without this check a batch committed between the staging
+    read and the rename SILENTLY VANISHES in the swap — the one
+    data-loss shape the rename-aside protocol cannot see on its own.
+    Cheap (one os.walk) relative to the rewrite it guards. On trip:
+    the staged tmp copy is deleted and the live store is left
+    untouched."""
     if _pre_swap_test_hook is not None:
         _pre_swap_test_hook(path)
     now = snapshot_data_files(path)
@@ -236,6 +344,65 @@ def check_no_concurrent_writer(
         )
 
 
+def rewrite_store(
+    path: str, op: str, write, tmp_suffix: str = "__compact"
+) -> None:
+    """The ONE rewrite-and-swap sequence, for every op that replaces a
+    store with a rewritten copy of itself (compaction, z-order, the
+    cell/ingest compactions, the streaming CDC merge). Call it under
+    swap_lease(path, op):
+
+    1. snapshot the live data files (the staged set);
+    2. ``write(tmp)`` stages the new version at ``<path>.<tmp_suffix>``
+       — it must read the store itself, AFTER the snapshot;
+    3. carry every ``_*.json`` sidecar (normalization stamp, store
+       meta) into tmp: they are invisible to the parquet scan, so the
+       swap would otherwise drop them and a stamped store would
+       silently degrade to the unstamped contract;
+    4. check_no_concurrent_writer, then swap_in(staged=) — a commit
+       landing in either window aborts loudly with the store intact.
+
+    Every crash point leaves a complete dataset that recover_swap
+    knows how to finish from."""
+    norm = path.rstrip("/")
+    tmp = f"{norm}.{tmp_suffix}"
+    staged = snapshot_data_files(norm)
+    write(tmp)
+    for f in os.listdir(norm):
+        if f.startswith("_") and f.endswith(".json"):
+            shutil.copyfile(os.path.join(norm, f), os.path.join(tmp, f))
+    check_no_concurrent_writer(norm, staged, op, tmp)
+    swap_in(tmp, norm, staged=staged, op=op)
+
+
+def _rewrite_sized(
+    spark: SparkSession, path: str, op: str, target_file_bytes: int, write
+) -> dict:
+    """A flat store rewritten into ceil(on-disk bytes / target) files
+    by ``write(df, tmp, n_out)`` — compact_parquet and z-order
+    optimize_table. Counts top-level files only: a partitioned layout
+    has none there and is left alone (compact each partition
+    directory). An EXISTING-but-empty dir is a zero-stat no-op; a
+    MISSING path raises FileNotFoundError (an empty store is a normal
+    pre-first-commit state, a missing one is a caller mistake)."""
+    import math
+
+    with swap_lease(path, op):
+        before = data_files(path, recursive=False)
+        if not before:
+            return {"files_before": 0, "files_after": 0, "bytes": 0}
+        total = sum(os.path.getsize(f) for f in before)
+        n_out = max(1, math.ceil(total / target_file_bytes))
+        rewrite_store(
+            path, op, lambda tmp: write(spark.read.parquet(path), tmp, n_out)
+        )
+        return {
+            "files_before": len(before),
+            "files_after": len(data_files(path, recursive=False)),
+            "bytes": total,
+        }
+
+
 def compact_parquet(
     spark: SparkSession,
     path: str,
@@ -251,14 +418,11 @@ def compact_parquet(
     coalesce (no shuffle — each output file concatenates input splits;
     row order within files may differ run-to-run but content is
     identical); shuffle=True uses repartition for evenly-sized files
-    when the inputs are skewed. Crash-safe swap: the compacted copy
-    writes to `<path>.__compact`, the original is renamed aside to
-    `<path>.__old`, the copy takes its place, then the old dir is
-    removed — every crash point leaves a COMPLETE dataset under a
-    predictable name (recovery: if `path` is missing, rename
-    `<path>.__old` — or `<path>.__compact` if `__old` is also gone —
-    back to `path`; a leftover `__old` beside a live `path` is
-    post-swap garbage, delete it).
+    when the inputs are skewed. Crash-safe swap (rewrite_store): the
+    compacted copy writes to `<path>.__compact`, the original is
+    renamed aside to `<path>.__old`, the copy takes its place, then
+    the old dir is removed — every crash point leaves a COMPLETE
+    dataset under a predictable name (recover_swap finishes it).
 
     Returns {"files_before", "files_after", "bytes"}. NOT for
     partitioned layouts (compact each partition directory); the swap
@@ -266,80 +430,17 @@ def compact_parquet(
     an old-or-new mix per partition or a mid-scan
     FileNotFoundException (see swap_in's CONCURRENT-READER VISIBILITY
     note) — run in the maintenance window, like any
-    non-transactional lakehouse compaction.
-
-    Degenerate cardinalities (pinned in
-    tests/test_store_lifecycle_edges.py): an EXISTING-but-empty dir
-    is a zero-stat no-op; a MISSING path raises FileNotFoundError
-    (an empty store is a normal pre-first-commit state, a missing
-    one is a caller mistake).
+    non-transactional lakehouse compaction. Empty and missing paths:
+    see _rewrite_sized (pinned in tests/test_store_lifecycle_edges.py).
     """
-    import math
-    import os
-    import shutil
 
-    _require_local_swap_path(path, "compact_parquet")
-    # SINGLE-WRITER (enforced, r16): the listing, staging read,
-    # rewrite, and swap all run under the store lease — an append
-    # racing this compaction now fails up front (its side) or is
-    # excluded (ours) instead of landing files in the pre-swap
-    # directory that the rename-aside then strands. The staged-
-    # snapshot tripwire stays as defense against out-of-band writers.
-    with store_writer_lease(path, "compact_parquet"):
-        return _compact_parquet_locked(
-            spark, path, target_file_bytes, shuffle
-        )
+    def write(df: DataFrame, tmp: str, n_out: int) -> None:
+        sized = df.repartition(n_out) if shuffle else df.coalesce(n_out)
+        sized.write.mode("overwrite").parquet(tmp)
 
-
-def _compact_parquet_locked(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int,
-    shuffle: bool,
-) -> dict:
-    import math
-    import os
-    import shutil
-
-    def data_files(d: str) -> list[str]:
-        return [
-            os.path.join(d, f)
-            for f in os.listdir(d)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-
-    before = data_files(path)
-    if not before:
-        # empty existing dir (no increment committed yet): nothing to
-        # compact — a clean no-op beats the raw UNABLE_TO_INFER_SCHEMA
-        # the parquet read would otherwise throw (missing dirs still
-        # FileNotFoundError on the listdir above, deliberately loud)
-        return {"files_before": 0, "files_after": 0, "bytes": 0}
-    staged = snapshot_data_files(path)
-    total = sum(os.path.getsize(f) for f in before)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    sized = df.repartition(n_out) if shuffle else df.coalesce(n_out)
-    norm = path.rstrip("/")
-    tmp = norm + ".__compact"
-    sized.write.mode("overwrite").parquet(tmp)
-    # Carry `_*.json` sidecars (normalization stamp, store meta)
-    # through the rewrite: they are invisible to the parquet scan, so
-    # the rename-aside swap would otherwise DROP them and a stamped
-    # store would silently degrade to the unstamped-legacy contract
-    # after one compaction (same carry as _compact_ingest_impl).
-    for f in os.listdir(norm):
-        if f.startswith("_") and f.endswith(".json"):
-            shutil.copyfile(os.path.join(norm, f), os.path.join(tmp, f))
-    # Swap via rename-aside (shared protocol): rmtree(path) before
-    # the rename would leave a crash window with NO dataset at path.
-    check_no_concurrent_writer(norm, staged, "compact_parquet", tmp)
-    swap_in(tmp, norm, staged=staged, op="compact_parquet")
-    return {
-        "files_before": len(before),
-        "files_after": len(data_files(path)),
-        "bytes": total,
-    }
+    return _rewrite_sized(
+        spark, path, "compact_parquet", target_file_bytes, write
+    )
 
 
 def swap_in(
@@ -351,9 +452,8 @@ def swap_in(
     these states): park the current dataset at `.__old`, rename tmp
     in, drop the parked copy. Every crash point leaves a complete
     dataset at a name recover_swap knows how to finish from.
-    DRIVER-LOCAL paths only (POSIX os.replace) — callers that accept
-    user paths must reject URIs up front, the way
-    streaming_cdc_apply does.
+    DRIVER-LOCAL paths only (POSIX os.replace); callers reach it
+    through rewrite_store under swap_lease, which rejects URIs.
 
     `staged` (the snapshot_data_files set the rewrite was staged
     from) closes the concurrent-writer race the PRE-swap check
@@ -378,9 +478,6 @@ def swap_in(
     family in a maintenance window or behind an external
     reader-drain, same as any non-transactional lakehouse compaction.
     """
-    import os
-    import shutil
-
     norm = path.rstrip("/")
     old = norm + ".__old"
     if _post_check_test_hook is not None:
@@ -408,8 +505,9 @@ def swap_in(
 
 
 def recover_swap(path: str, tmp_suffixes: tuple[str, ...] = ("__compact", "__merge")) -> str:
-    """Recovery for the rename-aside swap protocol used by
-    compact_parquet and streaming.pipelines.streaming_cdc_apply.
+    """Recovery for the rename-aside swap protocol (rewrite_store),
+    under the store's swap_lease — recovery racing a live writer
+    would finish or roll back a swap under its feet.
 
     Crash states and actions (every state holds ≥1 COMPLETE dataset):
     - `path` present → swap finished (or never started): delete any
@@ -422,43 +520,33 @@ def recover_swap(path: str, tmp_suffixes: tuple[str, ...] = ("__compact", "__mer
       crash hit mid-write or before the second rename with a torn tmp:
       restore the original, drop the torn tmp, return "rolled_back".
     """
-    import os
-    import shutil
-
-    _require_local_swap_path(path, "recover_swap")
-    # SINGLE-WRITER (enforced, r16): recovery racing a live writer
-    # would finish/roll back a swap under its feet — take the lease.
-    with store_writer_lease(path, "recover_swap"):
-        return _recover_swap_locked(path, tmp_suffixes)
+    with swap_lease(path, "recover_swap"):
+        return _recover_torn_swap(path, tmp_suffixes)
 
 
-def _recover_swap_locked(path: str, tmp_suffixes: tuple[str, ...]) -> str:
-    import os
-    import shutil
-
+def _recover_torn_swap(path: str, tmp_suffixes: tuple[str, ...]) -> str:
+    """recover_swap's state machine, for a caller that already holds
+    the store's lease (streaming_cdc_apply heals and merges under one
+    lease; a nested lease would conflict with its own)."""
     norm = path.rstrip("/")
     old = norm + ".__old"
     tmps = [norm + "." + s for s in tmp_suffixes]
     if os.path.exists(norm):
-        shutil.rmtree(old, ignore_errors=True)
-        for t in tmps:
-            shutil.rmtree(t, ignore_errors=True)
-        return "intact"
-    complete = [
+        state = "intact"
+    elif complete := [
         t for t in tmps if os.path.exists(os.path.join(t, "_SUCCESS"))
-    ]
-    if complete:
+    ]:
         os.replace(complete[0], norm)
-        shutil.rmtree(old, ignore_errors=True)
-        for t in tmps:
-            shutil.rmtree(t, ignore_errors=True)
-        return "completed_swap"
-    if os.path.exists(old):
+        state = "completed_swap"
+    elif os.path.exists(old):
         os.replace(old, norm)
-        for t in tmps:
-            shutil.rmtree(t, ignore_errors=True)
-        return "rolled_back"
-    raise FileNotFoundError(f"no recoverable dataset for {path}")
+        state = "rolled_back"
+    else:
+        raise FileNotFoundError(f"no recoverable dataset for {path}")
+    shutil.rmtree(old, ignore_errors=True)
+    for t in tmps:
+        shutil.rmtree(t, ignore_errors=True)
+    return state
 
 
 def delete_keys_partitioned(
@@ -483,74 +571,61 @@ def delete_keys_partitioned(
 
     Returns {"partitions_rewritten", "rows_deleted"}.
 
-    SINGLE-WRITER (enforced, r16): the dynamic partition overwrite
-    rewrites live partitions in place — racing any other mutator
-    interleaves commits (see the append_fingerprints probe). Runs
-    under store_writer_lease; remote URIs are documented-contract
-    only.
+    SINGLE-WRITER: the dynamic partition overwrite rewrites live
+    partitions in place, so the whole job runs under
+    store_writer_lease (ConcurrentWriterError); it needs no swap and
+    works on any URI.
     """
     with store_writer_lease(path, "delete_keys_partitioned"):
-        return _delete_keys_partitioned_locked(
-            spark, path, keys, key_col, partition_col
+        df = spark.read.parquet(path)
+        # null-safe key matching throughout: a doomed NULL key must
+        # delete NULL-key rows (plain equi-joins silently drop them)
+        doomed = keys.select(F.col(key_col).alias("__doomed_key")).distinct()
+        key_match = F.col(key_col).eqNullSafe(F.col("__doomed_key"))
+        parts = [
+            r[0]
+            for r in df.join(doomed, key_match, "left_semi")
+            .select(partition_col)
+            .distinct()
+            .collect()  # partition VALUES only — dim-sized by definition
+        ]
+        if not parts:
+            return {"partitions_rewritten": 0, "rows_deleted": 0}
+        # isin() never matches NULL, so a NULL partition value (the
+        # __HIVE_DEFAULT_PARTITION__ directory) gets its own branch;
+        # the literal isin keeps static partition pruning for the rest
+        non_null = [v for v in parts if v is not None]
+        cond = (
+            F.col(partition_col).isin(non_null) if non_null else F.lit(False)
         )
-
-
-def _delete_keys_partitioned_locked(
-    spark: SparkSession,
-    path: str,
-    keys: DataFrame,
-    key_col: str,
-    partition_col: str,
-) -> dict:
-    df = spark.read.parquet(path)
-    # null-safe key matching throughout: a doomed NULL key must
-    # delete NULL-key rows (plain equi-joins silently drop them)
-    doomed = keys.select(F.col(key_col).alias("__doomed_key")).distinct()
-    key_match = F.col(key_col).eqNullSafe(F.col("__doomed_key"))
-    parts = [
-        r[0]
-        for r in df.join(doomed, key_match, "left_semi")
-        .select(partition_col)
-        .distinct()
-        .collect()  # partition VALUES only — dim-sized by definition
-    ]
-    if not parts:
-        return {"partitions_rewritten": 0, "rows_deleted": 0}
-    # isin() never matches NULL, so a NULL partition value (the
-    # __HIVE_DEFAULT_PARTITION__ directory) gets its own branch;
-    # the literal isin keeps static partition pruning for the rest
-    non_null = [v for v in parts if v is not None]
-    cond = (
-        F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    )
-    if len(non_null) < len(parts):
-        cond = cond | F.col(partition_col).isNull()
-    affected = df.filter(cond)
-    before = affected.count()
-    kept = affected.join(doomed, key_match, "left_anti").localCheckpoint(
-        eager=True
-    )
-    kept_n = kept.count()
-    (
-        kept.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-    # dynamic overwrite only replaces partitions PRESENT in the
-    # written frame — a partition whose every row is doomed writes
-    # nothing and would silently survive. Drop those directories
-    # explicitly (see remove_partition_dirs for the on-disk name
-    # resolution).
-    kept_parts = {
-        r[0] for r in kept.select(partition_col).distinct().collect()
-    }
-    gone = [v for v in parts if v not in kept_parts]
-    remove_partition_dirs(spark, path, partition_col, gone)
-    return {
-        "partitions_rewritten": len(parts),
-        "rows_deleted": before - kept_n,
-    }
+        if len(non_null) < len(parts):
+            cond = cond | F.col(partition_col).isNull()
+        affected = df.filter(cond)
+        before = affected.count()
+        kept = affected.join(doomed, key_match, "left_anti").localCheckpoint(
+            eager=True
+        )
+        kept_n = kept.count()
+        (
+            kept.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .parquet(path)
+        )
+        # dynamic overwrite only replaces partitions PRESENT in the
+        # written frame — a partition whose every row is doomed writes
+        # nothing and would silently survive. Drop those directories
+        # explicitly (see remove_partition_dirs for the on-disk name
+        # resolution).
+        kept_parts = {
+            r[0] for r in kept.select(partition_col).distinct().collect()
+        }
+        gone = [v for v in parts if v not in kept_parts]
+        remove_partition_dirs(spark, path, partition_col, gone)
+        return {
+            "partitions_rewritten": len(parts),
+            "rows_deleted": before - kept_n,
+        }
 
 
 def remove_partition_dirs(

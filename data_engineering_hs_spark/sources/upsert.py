@@ -30,6 +30,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_engineering_hs_spark.sources.parquet import read_parquet_if_exists
+
 
 def upsert_parquet(
     spark: SparkSession,
@@ -39,23 +41,16 @@ def upsert_parquet(
 ) -> int:
     """Insert-if-absent by key; returns rows actually appended."""
     deduped = batch.dropDuplicates(list(keys))
-    # Probe the target THROUGH Spark, not os.path.exists: the driver's
-    # local filesystem says nothing about hdfs:/s3a: targets (where
-    # exists() is always False and every replayed batch would append
-    # duplicates, silently breaking idempotency), and an existing but
-    # empty directory (crash between mkdir and first commit) must
-    # count as absent rather than fail schema inference.
-    try:
-        existing_keys = spark.read.parquet(target_path).select(*keys)
-        fresh = deduped.join(existing_keys, list(keys), "left_anti")
-    except Exception as e:  # noqa: BLE001 — AnalysisException subclasses vary
-        if not (
-            "PATH_NOT_FOUND" in str(e)
-            or "UNABLE_TO_INFER_SCHEMA" in str(e)
-            or "Path does not exist" in str(e)
-        ):
-            raise
-        fresh = deduped
+    # Probe the target THROUGH Spark (read_parquet_if_exists), not
+    # os.path.exists: a missing target, a remote one and an existing
+    # but empty directory (crash between mkdir and first commit) must
+    # all be told apart correctly or replays append duplicates.
+    existing = read_parquet_if_exists(spark, target_path)
+    fresh = (
+        deduped
+        if existing is None
+        else deduped.join(existing.select(*keys), list(keys), "left_anti")
+    )
     # Materialize the anti-join BEFORE appending. cache()+count() is
     # NOT a correctness barrier — evicted partitions recompute lazily
     # during the write and would re-scan the target mid-append;

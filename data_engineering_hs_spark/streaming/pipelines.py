@@ -48,6 +48,26 @@ def enrich_batch(batch: DataFrame, batch_id: int) -> DataFrame:
     )
 
 
+def _max_batch_id(spark, path: str) -> int | None:
+    """Largest N among the ``batch_id=N`` directories directly under
+    `path`, or None when there are none (or `path` is absent). One
+    driver-side Hadoop-FS listing, so it works for any Spark URI."""
+    jvm = spark._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return None
+    ids = []
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith("batch_id="):
+            try:
+                ids.append(int(name.split("=", 1)[1]))
+            except ValueError:
+                pass
+    return max(ids, default=None)
+
+
 def _refuse_batch_regression(spark, path: str, batch_id: int, what: str) -> None:
     """Refuse a stream whose batch ids regressed below the sink's
     committed partitions — the wiped-checkpoint state. These sinks
@@ -57,24 +77,8 @@ def _refuse_batch_regression(spark, path: str, batch_id: int, what: str) -> None
     append-shaped sink, a fresh checkpoint replaying the whole source
     into batch 0 leaves batches 1..N behind as duplicates — also
     wrong). A legitimate crash-replay only re-runs the LAST batch, so
-    max(on-disk batch_id) <= incoming is the invariant. One driver-
-    side Hadoop-FS listing per batch (any URI)."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return
-    max_batch = None
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch_id="):
-            try:
-                max_batch = max(
-                    max_batch if max_batch is not None else -(2**62),
-                    int(name.split("=", 1)[1]),
-                )
-            except ValueError:
-                pass
+    max(on-disk batch_id) <= incoming is the invariant."""
+    max_batch = _max_batch_id(spark, path)
     if max_batch is not None and max_batch > batch_id:
         raise RuntimeError(
             f"{what} at {path} already holds batch_id={max_batch} but "
@@ -446,7 +450,7 @@ def _prepare_run_layout(spark, path: str, run_ns: str, batch_id: int) -> None:
        (the pre-partitioning append store) and single-level
        ``batch_id=N/`` dirs (the r10 layout) — mixed with ``run=<ns>/``
        dirs wedge Spark partition discovery permanently ('Conflicting
-       directory structures detected', which _read_parquet_if_exists
+       directory structures detected', which read_parquet_if_exists
        rightly does NOT treat as absent). Before the first namespaced
        write can create that mix: batch_id=N dirs RENAME under
        ``run=legacy/`` (a metadata move, no data rewrite) and root
@@ -472,21 +476,7 @@ def _prepare_run_layout(spark, path: str, run_ns: str, batch_id: int) -> None:
     if not fs.exists(root):
         return
     _migrate_legacy_layout(spark, fs, jvm, path)
-    ns_dir = jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + f"/run={run_ns}"
-    )
-    max_batch = None
-    if fs.exists(ns_dir):
-        for st in fs.listStatus(ns_dir):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("batch_id="):
-                try:
-                    max_batch = max(
-                        max_batch if max_batch is not None else -(2**62),
-                        int(name.split("=", 1)[1]),
-                    )
-                except ValueError:
-                    pass
+    max_batch = _max_batch_id(spark, path.rstrip("/") + f"/run={run_ns}")
     if max_batch is not None and max_batch > batch_id:
         raise RuntimeError(
             f"{path} already holds batch_id={max_batch} for this "
@@ -573,21 +563,17 @@ def compact_ingest_store(spark, path: str, files_per_partition: int = 1) -> dict
     relabeled rows can never collide with a real run (namespaces are
     hex digests; 'compacted'/'legacy' are reserved).
 
-    Crash-safe via the shared rename-aside swap (stage the full new
-    layout beside the store, two POSIX renames, recover_swap finishes
-    any crash point) — DRIVER-LOCAL paths only, like every swap
-    caller; compact a remote store by rebuilding or a transactional
-    format's OPTIMIZE. Do not run concurrently with an active
-    trigger's commit (the swap could drop a batch committed after the
-    staging read) — run it between triggers or while the stream is
-    stopped, like compact_band_store's cadence contract. A violation
-    cannot vanish silently (r13 pre-check, r14 closure): the file set
-    is re-snapshotted before the rename (check_no_concurrent_writer)
-    AND re-verified after the park rename freezes the store
-    (swap_in(staged=...)) — a commit in either window aborts with
-    RuntimeError and the store rolled back intact (late batch
-    included); a writer racing the renames themselves fails the swap
-    loudly on ENOTEMPTY with both datasets preserved.
+    Crash-safe via the shared rewrite-and-swap
+    (sources.parquet.rewrite_store: stage the full new layout beside
+    the store, two POSIX renames, recover_swap finishes any crash
+    point) — DRIVER-LOCAL paths only, like every swap caller; compact
+    a remote store by rebuilding or a transactional format's
+    OPTIMIZE. Do not run concurrently with an active trigger's commit
+    — run it between triggers or while the stream is stopped, like
+    compact_band_store's cadence contract. A violation cannot vanish
+    silently: a commit landing between the staging read and the swap
+    aborts with RuntimeError and the store rolled back intact (late
+    batch included).
 
     Legacy layouts (pre-namespace root files / bare batch_id=N dirs)
     are migrated first, same as the per-batch path. Returns
@@ -681,169 +667,126 @@ def retire_runs(
 def _compact_ingest_impl(
     spark, path: str, files_per_partition: int, retire: frozenset
 ) -> dict:
+    """compact_ingest_store (retire empty) and retire_runs: the whole
+    op runs under the store's swap_lease through the shared
+    rewrite-and-swap (sources.parquet.rewrite_store). A live trigger's
+    batch commit is deliberately NOT leased (see
+    ConcurrentWriterError), so on that side the staged-snapshot
+    tripwire is the guard: a batch landing mid-swap rolls the
+    compaction back with the batch intact."""
+    import os
+    import shutil
+    from urllib.parse import unquote
+
     from data_engineering_hs_spark.sources.parquet import (
-        _require_local_swap_path,
-        store_writer_lease,
+        data_files,
+        rewrite_store,
+        swap_lease,
     )
 
     op = "retire_runs" if retire else "compact_ingest_store"
-    _require_local_swap_path(path, op)
-    # SINGLE-WRITER (enforced, r16): maintenance on the ingest store
-    # takes the store lease — a live trigger's batch commit is NOT
-    # leased (failing production batches in favor of maintenance
-    # would be backwards), so the staged-snapshot tripwire remains
-    # the guard on that side: a batch landing mid-swap rolls the
-    # compaction back with the batch intact.
-    with store_writer_lease(path, op):
-        return _compact_ingest_locked(
-            spark, path, files_per_partition, retire, op
-        )
-
-
-def _compact_ingest_locked(
-    spark, path: str, files_per_partition: int, retire: frozenset,
-    op: str,
-) -> dict:
-    import os
-
-    from data_engineering_hs_spark.sources.parquet import (
-        check_no_concurrent_writer,
-        snapshot_data_files,
-        swap_in,
-    )
-
     norm = path.rstrip("/")
-    if not os.path.isdir(norm):
-        if retire:
-            raise ValueError(
-                f"retire_runs: {norm} does not exist — nothing to retire"
-            )
-        return {
-            "files_before": 0, "files_after": 0,
-            "partitions_before": 0, "partitions_after": 0,
-        }
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(norm)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    _migrate_legacy_layout(spark, fs, jvm, norm)
+    zero = {
+        "files_before": 0, "files_after": 0,
+        "partitions_before": 0, "partitions_after": 0,
+    }
     if retire:
+        zero["runs_retired"] = sorted(retire)
+
+    def stats() -> tuple[int, int]:
+        files = data_files(norm)
+        return len(files), len({os.path.dirname(f) for f in files})
+
+    def run_dirs() -> dict[str, str]:
         # Partition directory names are URI-escaped by Spark on write
         # (PartitioningUtils.escapePathName: '%', '/', ':', non-ASCII
         # etc. → %XX, '%' itself always escaped, so unquote is a
         # faithful inverse). Compare UNESCAPED values or a run value
         # with any special character would always trip the 'not
-        # present' guard despite existing (ADVICE r12). Run
-        # namespaces are hex digests today, but runs= accepts
-        # arbitrary caller values.
-        from urllib.parse import unquote
-
-        present = {
-            unquote(d.split("=", 1)[1])
+        # present' guard despite existing (ADVICE r12).
+        return {
+            unquote(d.split("=", 1)[1]): os.path.join(norm, d)
             for d in os.listdir(norm)
             if d.startswith("run=") and os.path.isdir(os.path.join(norm, d))
         }
-        missing = sorted(retire - present)
+
+    with swap_lease(path, op):
+        if not os.path.isdir(norm):
+            if retire:
+                raise ValueError(
+                    f"retire_runs: {norm} does not exist — nothing to retire"
+                )
+            return zero
+        jvm = spark._jvm
+        root = jvm.org.apache.hadoop.fs.Path(norm)
+        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+        _migrate_legacy_layout(spark, fs, jvm, norm)
+        missing = sorted(retire - set(run_dirs()))
         if missing:
             raise ValueError(
                 f"retire_runs: run(s) {missing} not present in {norm} "
-                f"(existing runs: {sorted(present)}) — a silently "
+                f"(existing runs: {sorted(run_dirs())}) — a silently "
                 "skipped retirement would leave the caller believing "
                 "the listing cost shrank"
             )
+        files_before, parts_before = stats()
+        if files_before == 0:
+            # empty EXISTING store (dir created, no increment committed,
+            # or a 0-row first batch): nothing to rewrite. Named runs
+            # whose dirs exist but hold no data are removed (nothing to
+            # fold; leaving them keeps the listing cost the caller asked
+            # to shed).
+            for run, d in run_dirs().items():
+                if run in retire:
+                    shutil.rmtree(d)
+            return zero
 
-    def stats(d: str) -> tuple[int, int]:
-        files, parts = 0, set()
-        for r, _dirs, fnames in os.walk(d):
-            for f in fnames:
-                if f.endswith(".parquet"):
-                    files += 1
-                    parts.add(r)
-        return files, len(parts)
+        def write(tmp: str) -> None:
+            df = spark.read.parquet(norm)
+            # max batch per run from partition-column metadata (no data
+            # read)
+            run_max = df.groupBy("run").agg(F.max("batch_id").alias("__max"))
+            relabel = (F.col("batch_id") < F.col("__max")) | (
+                F.col("run") == F.lit("compacted")
+            )
+            if retire:
+                relabel = relabel | F.col("run").isin(*sorted(retire))
+            merged = (
+                df.join(F.broadcast(run_max), "run")
+                .withColumn(
+                    "run",
+                    F.when(relabel, F.lit("compacted")).otherwise(F.col("run")),
+                )
+                .withColumn(
+                    "batch_id",
+                    F.when(relabel, F.lit(-1)).otherwise(F.col("batch_id")),
+                )
+                .drop("__max")
+            )
+            # one write task (= one file) per surviving partition; salt
+            # for a hot consolidated partition when asked
+            if files_per_partition > 1:
+                salt = [c for c in df.columns if c not in ("run", "batch_id")]
+                merged = merged.repartition(
+                    F.col("run"),
+                    F.col("batch_id"),
+                    F.pmod(F.xxhash64(*salt[:1]), F.lit(files_per_partition)),
+                )
+            else:
+                merged = merged.repartition("run", "batch_id")
+            merged.write.mode("overwrite").partitionBy(
+                "run", "batch_id"
+            ).parquet(tmp)
 
-    files_before, parts_before = stats(norm)
-    if files_before == 0:
-        # empty EXISTING store (dir created, no increment committed,
-        # or a 0-row first batch): nothing to rewrite — a clean no-op
-        # beats the raw UNABLE_TO_INFER_SCHEMA the parquet read would
-        # throw. Retirement of named runs whose dirs exist but hold
-        # no data removes those empty dirs (nothing to fold; leaving
-        # them would keep the listing cost the caller asked to shed).
-        import shutil as _shutil
-
-        if retire:
-            for d in os.listdir(norm):
-                if d.startswith("run=") and os.path.isdir(
-                    os.path.join(norm, d)
-                ):
-                    from urllib.parse import unquote
-
-                    if unquote(d.split("=", 1)[1]) in retire:
-                        _shutil.rmtree(os.path.join(norm, d))
-        out = {
-            "files_before": 0, "files_after": 0,
-            "partitions_before": 0, "partitions_after": 0,
+        rewrite_store(norm, op, write)
+        files_after, parts_after = stats()
+        return {
+            **zero,
+            "files_before": files_before,
+            "files_after": files_after,
+            "partitions_before": parts_before,
+            "partitions_after": parts_after,
         }
-        if retire:
-            out["runs_retired"] = sorted(retire)
-        return out
-    # staging snapshot for the pre-swap concurrent-writer tripwire: a
-    # trigger committing a batch after this point must abort the swap
-    # (its partition would silently vanish in the rename otherwise)
-    staged = snapshot_data_files(norm)
-    df = spark.read.parquet(norm)
-    # max batch per run from partition-column metadata (no data read)
-    run_max = df.groupBy("run").agg(F.max("batch_id").alias("__max"))
-    relabel = (F.col("batch_id") < F.col("__max")) | (
-        F.col("run") == F.lit("compacted")
-    )
-    if retire:
-        relabel = relabel | F.col("run").isin(*sorted(retire))
-    merged = (
-        df.join(F.broadcast(run_max), "run")
-        .withColumn(
-            "run", F.when(relabel, F.lit("compacted")).otherwise(F.col("run"))
-        )
-        .withColumn(
-            "batch_id",
-            F.when(relabel, F.lit(-1)).otherwise(F.col("batch_id")),
-        )
-        .drop("__max")
-    )
-    # one write task (= one file) per surviving partition; salt for
-    # a hot consolidated partition when asked
-    if files_per_partition > 1:
-        merged = merged.repartition(
-            F.col("run"),
-            F.col("batch_id"),
-            F.pmod(
-                F.xxhash64(*[c for c in df.columns if c not in ("run", "batch_id")][:1]),
-                F.lit(files_per_partition),
-            ),
-        )
-    else:
-        merged = merged.repartition("run", "batch_id")
-    tmp = norm + ".__compact"
-    merged.write.mode("overwrite").partitionBy("run", "batch_id").parquet(tmp)
-    # carry the normalization stamp through the rewrite (the sidecar
-    # is not a data file, so the swap would otherwise drop it and the
-    # store would degrade to the unstamped-legacy contract)
-    import shutil as _shutil
-
-    _meta = os.path.join(norm, "_norm_meta.json")
-    if os.path.exists(_meta):
-        _shutil.copyfile(_meta, os.path.join(tmp, "_norm_meta.json"))
-    check_no_concurrent_writer(norm, staged, op, tmp)
-    swap_in(tmp, norm, staged=staged, op=op)
-    files_after, parts_after = stats(norm)
-    out = {
-        "files_before": files_before,
-        "files_after": files_after,
-        "partitions_before": parts_before,
-        "partitions_after": parts_after,
-    }
-    if retire:
-        out["runs_retired"] = sorted(retire)
-    return out
 
 
 def _dedup_ingest_batch(
@@ -964,40 +907,35 @@ def streaming_cdc_apply(
     partitions) are the compose-with-partitioning upgrade, same
     protocol per partition directory.
 
+    Each micro-batch writes under the table's swap_lease: recovery of
+    a torn swap from a crashed predecessor and the rewrite-and-swap
+    (sources.parquet.rewrite_store) are one leased unit, so another leased writer on the same table raises
+    ConcurrentWriterError instead of vanishing in the swap (and an
+    out-of-band one trips the staged-snapshot checks).
+
     DRIVER-LOCAL table_path ONLY: the swap protocol is POSIX renames
     (os.replace), which no object store or HDFS URI supports — a
     remote path is rejected up front with guidance rather than dying
-    on a confusing FileNotFoundError at batch 0 (os.path.exists on
-    's3a://…' is always False). Remote tables need a transactional
-    format (Delta/Iceberg MERGE) — rename-aside cannot be made safe
-    on eventually-consistent stores.
+    at batch 0. Remote tables need a transactional format
+    (Delta/Iceberg MERGE) — rename-aside cannot be made safe on
+    eventually-consistent stores.
     """
-    from urllib.parse import urlparse
-
     from pyspark.sql import Window
 
     from data_engineering_hs_spark.operators.cdc import apply_changeset
     from data_engineering_hs_spark.sources.parquet import (
-        recover_swap,
-        swap_in,
+        _recover_torn_swap,
+        _require_local_swap_path,
+        rewrite_store,
+        swap_lease,
     )
 
-    if urlparse(table_path).scheme:
-        raise ValueError(
-            f"streaming_cdc_apply requires a driver-local table_path "
-            f"(got {table_path!r}): the crash-safe swap is POSIX "
-            "os.replace renames, which URIs (s3a/hdfs/abfs — and "
-            "file://, pass the plain path) don't support; use a "
-            "transactional table format for remote storage"
-        )
+    op = "streaming_cdc_apply"
+    _require_local_swap_path(table_path, op)
+    norm = table_path.rstrip("/")
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        norm = table_path.rstrip("/")
-        # self-heal a torn swap from a crashed predecessor run —
-        # otherwise a crash between the two os.replace calls leaves
-        # no directory at table_path and every replay dies on read
-        recover_swap(norm, tmp_suffixes=("__merge",))
         b = batch
         if seq_col is not None:
             w = Window.partitionBy(*keys).orderBy(F.desc(seq_col))
@@ -1021,19 +959,19 @@ def streaming_cdc_apply(
                     "seq_col so the batch can reduce to the last op "
                     "per key"
                 )
-        from data_engineering_hs_spark.sources.parquet import (
-            snapshot_data_files,
-        )
+        with swap_lease(norm, op):
+            # self-heal a torn swap from a crashed predecessor run —
+            # otherwise a crash between the two os.replace calls leaves
+            # no directory at table_path and every replay dies on read
+            _recover_torn_swap(norm, ("__merge",))
 
-        staged = snapshot_data_files(norm)
-        current = spark.read.parquet(norm)
-        merged = apply_changeset(current, b, keys=keys)
-        tmp = norm + ".__merge"
-        merged.write.mode("overwrite").parquet(tmp)
-        # the sink is single-writer by checkpoint contract, but an
-        # out-of-band writer to the same table would vanish in the
-        # swap — same post-park verification as the compaction family
-        swap_in(tmp, norm, staged=staged, op="streaming_cdc_apply")
+            def write(tmp: str) -> None:
+                current = spark.read.parquet(norm)
+                apply_changeset(current, b, keys=keys).write.mode(
+                    "overwrite"
+                ).parquet(tmp)
+
+            rewrite_store(norm, op, write, tmp_suffix="__merge")
 
     writer = (
         changes_stream.writeStream.outputMode("append")

@@ -228,6 +228,36 @@ class TestCompactParquetSidecarCarry:
         assert read_fingerprint_store(spark, store).count() == 3
 
 
+class TestOptimizeZorderSidecarCarry:
+    def test_zorder_keeps_norm_stamp_and_its_check(self, spark, tmp_path):
+        """optimize_table(zorder_cols=) rewrites through the same swap
+        as compact_parquet, so it must carry _*.json sidecars too —
+        it used to drop _norm_meta.json, silently degrading a stamped
+        store to the unstamped contract."""
+        from data_engineering_hs_spark.operators.dedup import (
+            check_normalization_version,
+            stamp_normalization_version,
+        )
+        from data_engineering_hs_spark.operators.scale import optimize_table
+
+        store = str(tmp_path / "zs")
+        spark.range(200).select(
+            (F.col("id") % 7).alias("a"), (F.col("id") % 11).alias("b")
+        ).repartition(3).write.parquet(store)
+        stamp_normalization_version(store)
+        meta_path = os.path.join(store, "_norm_meta.json")
+        optimize_table(spark, store, zorder_cols=["a", "b"])
+        assert json.load(open(meta_path)) == {
+            "normalization_version": NORMALIZATION_VERSION
+        }, "optimize_table(zorder_cols=) dropped the normalization sidecar"
+        assert spark.read.parquet(store).count() == 200
+        # the carried stamp still guards the store
+        with open(meta_path, "w") as fh:
+            json.dump({"normalization_version": 1}, fh)
+        with pytest.raises(RuntimeError, match="normalization_version"):
+            check_normalization_version(store)
+
+
 class TestAppendSchemaDiscipline:
     """r15 schema-drift probe: a plain parquet directory read samples
     ONE file's footer to infer the schema, so a mixed-schema store

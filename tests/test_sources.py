@@ -464,15 +464,33 @@ class TestSwapRecovery:
         import pytest as _pytest
 
         from data_engineering_hs_spark.operators.scale import optimize_table
+        from data_engineering_hs_spark.operators.similarity import (
+            compact_cell_store,
+        )
         from data_engineering_hs_spark.sources.parquet import (
             compact_parquet,
             recover_swap,
         )
+        from data_engineering_hs_spark.streaming.pipelines import (
+            compact_ingest_store,
+            retire_runs,
+            streaming_cdc_apply,
+        )
 
+        stream = spark.readStream.format("rate").load()
         for call in (
             lambda: compact_parquet(spark, "s3a://bucket/t"),
             lambda: recover_swap("hdfs://nn/t"),
             lambda: optimize_table(spark, "s3a://bucket/t", ["a"]),
+            lambda: compact_cell_store(spark, "s3a://bucket/t"),
+            lambda: compact_ingest_store(spark, "s3a://bucket/t"),
+            lambda: retire_runs(
+                spark, "s3a://bucket/t", runs=["x"],
+                checkpoints_gone_for_good=True,
+            ),
+            lambda: streaming_cdc_apply(
+                stream, "s3a://bucket/t", "ckpt", keys=["value"]
+            ),
         ):
             with _pytest.raises(ValueError, match="driver-local path"):
                 call()

@@ -28,6 +28,20 @@ class TestCompactParquetEdges:
         }
         assert os.listdir(d) == []  # untouched, no tmp debris
 
+    def test_zorder_empty_existing_dir_is_noop(self, spark, tmp_path):
+        # the z-order branch of optimize_table shares compact_parquet's
+        # edge contract (it used to raise UNABLE_TO_INFER_SCHEMA here)
+        from data_engineering_hs_spark.operators.scale import optimize_table
+
+        d = str(tmp_path / "empty")
+        os.makedirs(d)
+        assert optimize_table(spark, d, zorder_cols=["a", "b"]) == {
+            "files_before": 0,
+            "files_after": 0,
+            "bytes": 0,
+        }
+        assert os.listdir(d) == []
+
     def test_missing_dir_is_loud(self, spark, tmp_path):
         from data_engineering_hs_spark.sources.parquet import compact_parquet
 

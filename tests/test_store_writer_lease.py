@@ -286,3 +286,74 @@ class TestTortureRace:
             if d.startswith("fp.") and not d.endswith(".__lease")
         ]
         assert leftovers == [], leftovers
+
+
+class TestStreamingCdcApplyLease:
+    def test_batch_refused_while_another_process_holds_the_lease(
+        self, spark, tmp_path
+    ):
+        """streaming_cdc_apply swaps a rewritten table in each
+        micro-batch, so it takes the table's lease like every other
+        rewrite-and-swap op: with the lease held by another process
+        the batch fails with ConcurrentWriterError and the table's
+        files stay exactly as they were."""
+        from data_engineering_hs_spark.streaming.pipelines import (
+            streaming_cdc_apply,
+        )
+
+        table = str(tmp_path / "tbl")
+        src = str(tmp_path / "changes")
+        schema = "k long, v string, op string"
+        spark.createDataFrame(
+            [(1, "a"), (2, "b")], "k long, v string"
+        ).write.parquet(table)
+        spark.createDataFrame([(3, "c", "insert")], schema).coalesce(
+            1
+        ).write.parquet(src)
+
+        def files():
+            return sorted(
+                (os.path.join(r, f), os.stat(os.path.join(r, f)).st_mtime_ns)
+                for r, _dirs, fs in os.walk(table)
+                for f in fs
+            )
+
+        before = files()
+        code = (
+            "import sys\n"
+            "from data_engineering_hs_spark.sources.parquet import "
+            "store_writer_lease\n"
+            f"with store_writer_lease({table!r}, 'other-process'):\n"
+            "    print('held', flush=True)\n"
+            "    sys.stdin.read()\n"
+        )
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        holder = subprocess.Popen(
+            [sys.executable, "-c", code],
+            cwd=repo,
+            stdin=subprocess.PIPE,
+            stdout=subprocess.PIPE,
+            text=True,
+        )
+        try:
+            assert holder.stdout.readline().strip() == "held"
+            q = streaming_cdc_apply(
+                spark.readStream.schema(schema).parquet(src),
+                table,
+                str(tmp_path / "ckpt"),
+                keys=["k"],
+            )
+            try:
+                q.awaitTermination(300)
+            except Exception:
+                pass
+            err = str(q.exception())
+            assert "ConcurrentWriterError" in err, err
+            assert "other-process" in err, err
+        finally:
+            holder.stdin.close()
+            holder.wait(timeout=60)
+        assert files() == before
+        assert sorted(os.listdir(tmp_path)) == [
+            "changes", "ckpt", "tbl", "tbl.__lease",
+        ]
