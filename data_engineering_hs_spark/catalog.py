@@ -20,6 +20,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from data_engineering_hs_spark.sources.parquet import data_files
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -33,31 +35,6 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
-# Small dimensions safe to broadcast at any scale factor: their
-# cardinality is FIXED (region=5, nation=25). customer/supplier/part
-# grow linearly with SF and must NOT be force-broadcast — at the
-# 100-TB target they are tens of GB; size-based planning / AQE
-# decides their join strategy.
-BROADCASTABLE_TABLES = frozenset({"region", "nation"})
-
-
-def _data_files(path: str) -> list[str]:
-    """The parquet data files of a local dataset, in a deterministic
-    order: the file itself, or every *.parquet under a directory at any
-    depth (Hive partition subdirectories included), skipping
-    hidden/underscore entries (_SUCCESS, .crc, _temporary)."""
-    if os.path.isfile(path):
-        return [path]
-    files = []
-    for root, dirs, fnames in os.walk(path):
-        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
-        files += [
-            os.path.join(root, f)
-            for f in sorted(fnames)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
-    return files
-
 
 def _freshness(path: str) -> tuple | None:
     """(file, mtime_ns, size) of every data file under ``path``: the
@@ -65,10 +42,8 @@ def _freshness(path: str) -> tuple | None:
     file, nested partition files included, changes it. None for a path
     that is not local (remote URI) or vanishes mid-listing: never
     memoize what cannot be re-checked."""
-    if not os.path.exists(path):
-        return None
     try:
-        stats = [(f, os.stat(f)) for f in _data_files(path)]
+        stats = [(f, os.stat(f)) for f in data_files(path)]
     except OSError:
         return None
     return tuple((f, st.st_mtime_ns, st.st_size) for f, st in stats)
@@ -91,7 +66,7 @@ def _parquet_ts_is_nanos(path: str) -> bool:
     try:
         import pyarrow.parquet as pq
 
-        files = _data_files(path)
+        files = data_files(path)
         if not files:
             return False
         return "ns" in str(pq.read_schema(files[0]).field("ts").type)
@@ -150,7 +125,7 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 # The guide's remedy for unsplittable input (§2.5 "one huge
 # unsplittable file … otherwise repartition immediately after the
 # read") is a repartition straight after the read. MEASURED (r16
-# interleaved A/Bs at sf0.1, scripts_ab_rebalance.py): a BLANKET
+# interleaved A/Bs at sf0.1, OPTIMIZATION_r16.md): a BLANKET
 # rebalance of every table is a +33% LOSS on the headline total — the
 # exchange (and round-robin's sortBeforeRepartition local sort over
 # the full row) costs more than the freed cores buy on scan-light
@@ -168,8 +143,8 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 #     the machine: a dataset with >= cores files never reads footers
 #     (the freshness listing is only local os.stat calls), and the
 #     remaining < cores files must hold < cores TOTAL row groups;
-#     tiny inputs (< SPARK_GRAFT_REBALANCE_MIN_BYTES, default 256 KiB)
-#     stay serial — a shuffle would cost more than the scan.
+#     tiny inputs (< _REBALANCE_MIN_BYTES, 256 KiB) stay serial — a
+#     shuffle would cost more than the scan.
 # The partition count is defaultParallelism (NOT a constant), so the
 # driver's lower-core scaling runs get proportionally fewer
 # partitions. Catalyst pushes filters and column pruning THROUGH
@@ -180,6 +155,7 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 # independent by construction).
 # ---------------------------------------------------------------------------
 
+_REBALANCE_MIN_BYTES = 256 * 1024
 _REBALANCE_PROBE_CACHE: dict[tuple, int | None] = {}
 
 
@@ -187,20 +163,16 @@ def _rebalance_partitions(path: str, cores: int) -> int | None:
     """Partition count to hash-repartition an unsplittable local
     parquet dataset to (the caller supplies the key column), or None
     to leave the scan alone. Metadata-only; result memoized per
-    (path, cores, min_bytes, _freshness(path)), so a dataset rewritten
-    at the same path (testdata regen, an in-place rewrite of a nested
+    (path, cores, _freshness(path)), so a dataset rewritten at the
+    same path (testdata regen, an in-place rewrite of a nested
     partition file) re-probes instead of applying a stale decision."""
-    min_bytes = int(
-        os.environ.get("SPARK_GRAFT_REBALANCE_MIN_BYTES", str(256 * 1024))
-    )
     fresh = _freshness(path)
-    key = (path, cores, min_bytes, fresh)
+    key = (path, cores, fresh)
     if key in _REBALANCE_PROBE_CACHE:
         return _REBALANCE_PROBE_CACHE[key]
     result: int | None = None
     try:
-        # negative min_bytes disables the rebalance entirely
-        if min_bytes >= 0 and fresh and len(fresh) < cores:
+        if fresh and len(fresh) < cores:
             import pyarrow.parquet as pq
 
             units = 0
@@ -208,7 +180,8 @@ def _rebalance_partitions(path: str, cores: int) -> int | None:
                 units += pq.ParquetFile(f).metadata.num_row_groups
                 if units >= cores:
                     break
-            if units < cores and sum(size for _, _, size in fresh) >= min_bytes:
+            total = sum(size for _, _, size in fresh)
+            if units < cores and total >= _REBALANCE_MIN_BYTES:
                 result = cores
     except Exception:  # noqa: BLE001 — odd footer: let Spark scan as-is
         result = None
@@ -306,17 +279,6 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # generators under tests/ produce matching data.
 # ---------------------------------------------------------------------------
 
-# B1: lab01 transactions — headerless CSV with comma-packed items string
-# (lab01/tasks.ipynb:249 column names; items pack from the cell-1 generator).
-TRANSACTIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.IntegerType(), False),
-        T.StructField("timestamp", T.TimestampType(), False),
-        T.StructField("items", T.StringType(), False),
-        T.StructField("category", T.StringType(), False),
-    ]
-)
-
 # B2: lab02 nested users document (lab02/tasks.ipynb:118-151).
 USERS_SCHEMA = T.StructType(
     [
@@ -383,37 +345,6 @@ USERS_DOC_SCHEMA = T.StructType(
     ]
 )
 
-# B6: magic_shop raw layer is stringly typed; staging casts
-# (stg_customers.sql:3-9, stg_orders.sql:3-10, stg_payments.sql:3-9).
-MAGIC_RAW_CUSTOMERS_SCHEMA = T.StructType(
-    [
-        T.StructField("customer_id", T.StringType()),
-        T.StructField("first_name", T.StringType()),
-        T.StructField("last_name", T.StringType()),
-        T.StructField("house", T.StringType()),
-        T.StructField("signup_date", T.StringType()),
-    ]
-)
-MAGIC_RAW_ORDERS_SCHEMA = T.StructType(
-    [
-        T.StructField("order_id", T.StringType()),
-        T.StructField("customer_id", T.StringType()),
-        T.StructField("order_ts", T.StringType()),
-        T.StructField("item", T.StringType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("amount_galleons", T.StringType()),
-    ]
-)
-MAGIC_RAW_PAYMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("payment_id", T.StringType()),
-        T.StructField("order_id", T.StringType()),
-        T.StructField("method", T.StringType()),
-        T.StructField("paid_galleons", T.StringType()),
-        T.StructField("paid_at", T.StringType()),
-    ]
-)
-
 # B7: fuel_sales rich-typed parquet drops (generate_fuel_exports.py:127-151).
 FUEL_SALES_SCHEMA = T.StructType(
     [
@@ -446,15 +377,6 @@ FUEL_SALES_SCHEMA = T.StructType(
 )
 
 # B8: lab06 kafka event payload (async_data_gen.py:39-49).
-KAFKA_EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("user", T.StringType(), False),
-        T.StructField("event", T.StringType(), False),
-        T.StructField("amount", T.DoubleType(), False),
-        T.StructField("ts", T.LongType(), False),
-    ]
-)
-
 KAFKA_EVENT_AVRO_SCHEMA = """{
   "type": "record",
   "name": "Event",
@@ -514,23 +436,5 @@ REVENUE_EVENTS_SCHEMA = T.StructType(
             "exp",
             T.StructType([T.StructField("ab_group", T.StringType())]),
         ),
-    ]
-)
-
-# Events table `props` JSON payload contract (driver testdata `events`).
-EVENT_PROPS_SCHEMA = T.StructType(
-    [
-        T.StructField("price", T.DoubleType(), True),
-        T.StructField("payment_method", T.StringType(), True),
-        T.StructField("dwell_ms", T.IntegerType(), True),
-    ]
-)
-
-# B11: weather avro micro-fixture (avro_test.ipynb:10-23).
-WEATHER_SCHEMA = T.StructType(
-    [
-        T.StructField("station", T.StringType(), False),
-        T.StructField("time", T.LongType(), False),
-        T.StructField("temp", T.IntegerType(), False),
     ]
 )

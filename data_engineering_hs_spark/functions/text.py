@@ -64,10 +64,6 @@ def regex_token_count(c: ColumnOrName) -> Column:
     return F.size(F.regexp_extract_all(_col(c), F.lit(TOKEN_REGEX), 0))
 
 
-def char_count(c: ColumnOrName) -> Column:
-    return F.length(_col(c))
-
-
 def punct_ratio(c: ColumnOrName) -> Column:
     """Fraction of characters that are not letters/digits/space.
     Unicode classes, not [A-Za-z0-9]: the ASCII class counted every
@@ -168,7 +164,7 @@ def word_shingle_seq(c: ColumnOrName, k: int = 3) -> Column:
     per reference per row. Binding it once as a 1-element
     `transform` lambda variable (the cosine_from/stable_round
     single-evaluation shape) measured **−20.6 %** on d_minhash_lsh
-    at sf0.1 (scripts_ab_shingle_bind.py, interleaved median-of-7,
+    at sf0.1 (SCALE.md r16, interleaved median-of-7,
     values bit-identical).
     """
     if k < 1:

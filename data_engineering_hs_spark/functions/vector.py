@@ -116,13 +116,6 @@ def cosine_from(d: Column, norm_a: Column, norm_b: Column) -> Column:
     return F.when(nn == 0, F.lit(0.0)).otherwise(guarded)
 
 
-def l2_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
-    diffs = F.zip_with(
-        _col(a), _col(b), lambda x, y: (x.cast("double") - y.cast("double"))
-    )
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
 def dot_pandas(a: ColumnOrName, b: ColumnOrName) -> Column:
     """Arrow-batched vectorized dot product (numpy einsum).
 
@@ -223,9 +216,3 @@ def is_finite_vector(a: ColumnOrName) -> Column:
         lambda x: F.isnan(x.cast("double"))
         | (F.abs(x.cast("double")) == F.lit(float("inf"))),
     )
-
-
-def mean_vector(a: ColumnOrName) -> Column:
-    """Elementwise mean of an array column is an aggregate — see
-    operators.similarity.centroids for the groupBy form."""
-    raise NotImplementedError("use operators.similarity.centroids")

@@ -376,7 +376,7 @@ def _pairs_from_banded(
     child, which re-evaluates the pair-generation pipeline once more;
     that pass costs more than the exchange it saves, locally and at
     scale (the sample is a second pass over the pair occurrences).
-    Evidence: scripts_ab_minhash_r17.py --only-fusion.
+    Evidence: OPTIMIZATION_r17.md.
     """
     buckets = (
         banded.groupBy("band", "bucket")

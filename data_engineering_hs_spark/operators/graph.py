@@ -39,6 +39,20 @@ from data_engineering_hs_spark.functions.scalar import stable_round
 _LINEAGE_CUT_EVERY = 5
 
 
+def _release(frames: list[DataFrame]) -> None:
+    """Free the caches of loop frames no later frame reads. A
+    persist()ed frame leaves the CacheManager; a localCheckpoint
+    frame's blocks sit on its LogicalRDD's RDD, which
+    DataFrame.unpersist does not reach (the ContextCleaner would free
+    them only once the JVM collects the frame)."""
+    for frame in frames:
+        plan = frame._jdf.queryExecution().logical()  # noqa: SLF001
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+        else:
+            frame.unpersist()
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
@@ -92,13 +106,13 @@ def pagerank(
     #     documented on _bm25_scored, here resolved for free.
     # The caller's upstream edge pipeline (g_pagerank builds edges
     # from a 5-table join) still evaluates once: cache hits serve all
-    # later references. The final result is materialized ONCE at the
-    # end and every intermediate cache is explicitly unpersisted —
-    # leaving the entries to GC measured as a pathological slowdown
-    # for sessions that build many graphs (hypothesis fuzz lenses):
-    # the CacheManager compares each new plan against every live
-    # entry, so leaked entries make each persist() slower than the
-    # last.
+    # later references. Every cache is explicitly released: each
+    # lineage window's rank frames at its cut, the loop invariants once
+    # the result is materialized at the end — leaving the entries to
+    # GC measured as a pathological slowdown for sessions that build
+    # many graphs (hypothesis fuzz lenses): the CacheManager compares
+    # each new plan against every live entry, so leaked entries make
+    # each persist() slower than the last.
     cached = []
     e = (
         edges.select(
@@ -124,6 +138,7 @@ def pagerank(
     )
     cached.append(out_w)
     n_nodes = nodes.agg(F.count("*").alias("n")).localCheckpoint(eager=True)
+    cached.append(n_nodes)
     base = (1.0 - damping)
 
     ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
@@ -133,6 +148,7 @@ def pagerank(
         # (see functions.scalar.stable_round)
         stable_round(F.lit(1.0) / F.col("n"), round_decimals).alias("rank"),
     )
+    window = []  # this lineage window's frames, released at its cut
     for i in range(iterations):
         term = (
             F.col("rank")
@@ -172,7 +188,7 @@ def pagerank(
             # amplification is impossible.
             .persist()
         )
-        cached.append(ranks)
+        window.append(ranks)
         # Periodic LINEAGE CUT: persist does not truncate the logical
         # plan, and at 20+ iterations analysis + cache-matching over
         # the ever-deeper tree dominates wall time (measured: the
@@ -181,15 +197,20 @@ def pagerank(
         # planning"). Every _LINEAGE_CUT_EVERY rounds the frame is
         # checkpointed — partitioning is lost ONCE there (one extra
         # node-sized exchange next round, the edge cache stays
-        # co-partitioned) and the plan depth stays bounded.
+        # co-partitioned) and the plan depth stays bounded. The
+        # checkpoint holds the window's result without lineage, so the
+        # window's frames (and the previous cut) are released right
+        # there: N iterations hold at most _LINEAGE_CUT_EVERY rank
+        # caches at once, not N.
         if (i + 1) % _LINEAGE_CUT_EVERY == 0 and (i + 1) < iterations:
             ranks = ranks.localCheckpoint(eager=True)
+            _release(window)
+            window = [ranks]
     # Materialize once (same eager posture the old per-iteration
-    # checkpoints had), then release every intermediate cache — the
+    # checkpoints had), then release every remaining cache — the
     # result frame stands alone and repeated calls leak nothing.
     final = ranks.localCheckpoint(eager=True)
-    for frame in cached:
-        frame.unpersist()
+    _release(cached + window)
     return final
 
 
@@ -254,6 +275,7 @@ def label_propagation(
     from pyspark.sql import Window
 
     w = Window.partitionBy("a").orderBy(F.desc("cnt"), F.asc("label"))
+    window = []  # this lineage window's frames, released at its cut
     for i in range(iterations):
         labels = (
             und.join(labels.withColumnRenamed("node", "b"), "b")
@@ -265,15 +287,17 @@ def label_propagation(
             .select(F.col("a").alias("node"), "label")
             .persist()
         )
-        cached.append(labels)
-        # periodic lineage cut — same planning-time bound as pagerank
+        window.append(labels)
+        # periodic lineage cut — same planning-time bound and the same
+        # per-window release as pagerank
         if (i + 1) % _LINEAGE_CUT_EVERY == 0 and (i + 1) < iterations:
             labels = labels.localCheckpoint(eager=True)
-    # Materialize once, then release the intermediates (same leak
-    # rationale as pagerank above).
+            _release(window)
+            window = [labels]
+    # Materialize once, then release the rest (same leak rationale as
+    # pagerank above).
     final = labels.select(
         "node", F.col("label").alias("community")
     ).localCheckpoint(eager=True)
-    for frame in cached:
-        frame.unpersist()
+    _release(cached + window)
     return final

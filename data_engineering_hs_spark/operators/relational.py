@@ -63,20 +63,6 @@ def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     return df.orderBy(*order).limit(k)
 
 
-def top_k_per_group(
-    df: DataFrame, partition_cols: Sequence[str], order: Sequence[Column], k: int,
-    rank_col: str = "rn",
-) -> DataFrame:
-    """Top-k within each group via row_number window (engine extension;
-    the pattern behind 'most common per group')."""
-    w = Window.partitionBy(*partition_cols).orderBy(*order)
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
-        .drop(rank_col)
-    )
-
-
 def mode_of(df: DataFrame, col: str, tiebreak_asc: bool = True) -> DataFrame:
     """Most-common value of a column (lab01/tasks.ipynb:588).
     Deterministic tie-break on the value itself."""

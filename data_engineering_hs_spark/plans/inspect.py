@@ -9,8 +9,6 @@ and available to users as the engine's plan-review hook.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 
 from pyspark.sql import DataFrame
@@ -18,13 +16,6 @@ from pyspark.sql import DataFrame
 
 def plan_string(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-
-
-def codegen_string(df: DataFrame) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("codegen")
-    return buf.getvalue()
 
 
 def plan_summary(df: DataFrame) -> dict:

@@ -278,8 +278,6 @@ ORDER BY op
     "planted construction",
 )
 def c_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_engineering_hs_spark.sources.publish import (
         publish,
         read_published,

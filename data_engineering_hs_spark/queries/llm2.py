@@ -8,8 +8,6 @@ is SQL-expressible carries a term-by-term DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -175,9 +173,9 @@ def _bm25_scored(d: DataFrame) -> DataFrame:
     mid-query FAILS the query instead of recomputing (unlike
     persist(), which keeps lineage). Locally that risk is zero and
     the checkpoint beat the persist form (lineage-truncation also
-    shrinks the 4-consumer plan), so checkpoint stays the default;
-    cluster deployments set SPARK_GRAFT_BM25_MATERIALIZE=persist to
-    get the recomputable form. The blocks are released by the
+    shrinks the 4-consumer plan), so checkpoint is the one form; a
+    cluster deployment that needs the recomputable form swaps it for
+    persist() here. The blocks are released by the
     ContextCleaner when the frame is GC'd — per-invocation frames
     don't accumulate across bench rounds."""
     from data_engineering_hs_spark.functions.text import tokens
@@ -190,11 +188,7 @@ def _bm25_scored(d: DataFrame) -> DataFrame:
         "doc_id",
         F.size("t").alias("dl"),
         F.filter("t", lambda x: F.array_contains(terms, x)).alias("m"),
-    )
-    if os.environ.get("SPARK_GRAFT_BM25_MATERIALIZE", "checkpoint") == "persist":
-        reduced = reduced.persist()
-    else:
-        reduced = reduced.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     stats = reduced.agg(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
     )

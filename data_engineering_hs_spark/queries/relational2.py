@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_engineering_hs_spark.catalog import load_table
-from data_engineering_hs_spark.functions.scalar import discounted_revenue_cents, money_cents
+from data_engineering_hs_spark.functions.scalar import discounted_revenue_cents
 from data_engineering_hs_spark.queries.registry import register
 
 

@@ -264,19 +264,24 @@ def write_sidecar(path: str, name: str, payload: dict) -> None:
 
 
 def data_files(path: str, recursive: bool = True) -> list[str]:
-    """Paths of the parquet data files under the store directory
-    `path` — the one file counter behind the rewrite ops' stats.
-    ``recursive=False`` lists top-level files only. Skips `_`/`.`
-    names (_SUCCESS, .crc, _temporary, sidecars); a missing `path`
-    raises FileNotFoundError. (snapshot_data_files deliberately keeps
-    _temporary in view instead: the tripwire must see in-flight
-    commits.)"""
+    """Sorted paths of the parquet data files of the dataset at `path`
+    — the one parquet file lister (the rewrite ops' stats, the
+    catalog's freshness key and footer probe). A single-file `path`
+    lists itself; a directory lists its *.parquet files at any depth
+    (Hive partition subdirectories included), or top-level files only
+    with ``recursive=False``, skipping `_`/`.` names (_SUCCESS, .crc,
+    _temporary, sidecars). A missing `path` raises FileNotFoundError.
+    (snapshot_data_files deliberately keeps _temporary in view instead:
+    the tripwire must see in-flight commits.)"""
+    path = path.rstrip("/")
+    if os.path.isfile(path):
+        return [path]
 
     def fail(err: OSError) -> None:
         raise err
 
     out = []
-    for root, dirs, files in os.walk(path.rstrip("/"), onerror=fail):
+    for root, dirs, files in os.walk(path, onerror=fail):
         dirs[:] = [
             d for d in dirs if recursive and not d.startswith(("_", "."))
         ]
@@ -285,7 +290,7 @@ def data_files(path: str, recursive: bool = True) -> list[str]:
             for f in files
             if f.endswith(".parquet") and not f.startswith(("_", "."))
         ]
-    return out
+    return sorted(out)
 
 
 # Test seam for the pre-swap tripwire: called (with the store path)

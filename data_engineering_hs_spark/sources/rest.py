@@ -136,21 +136,6 @@ def fetch_ids(
     return src.mapInPandas(run, schema=FETCH_RESULT_SCHEMA)
 
 
-ORDER_FLAT_SCHEMA = T.StructType(
-    [
-        T.StructField("order_id", T.LongType()),
-        T.StructField("account_id", T.LongType()),
-        T.StructField("company", T.StringType()),
-        T.StructField("contact_email", T.StringType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("currency", T.StringType()),
-        T.StructField("subtotal", T.DoubleType()),
-        T.StructField("total", T.DoubleType()),
-        T.StructField("created_at", T.StringType()),
-    ]
-)
-
-
 def flatten_orders(fetched: DataFrame) -> DataFrame:
     """S25: project 9 scalar fields from the nested order JSON body
     (client_async.py:32-42 column list), JVM-side via from_json."""

@@ -70,66 +70,3 @@ def stateful_counter(
         outputMode="update",
         timeoutConf=timeout,
     )
-
-
-def _tws_available() -> bool:
-    """transformWithState's Python driver worker speaks protobuf to
-    the JVM; without a working google.protobuf the runner crashes at
-    init (sandbox state — same class of env gate as the live-Kafka
-    test)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stateful_counter_tws(
-    keyed: DataFrame,
-    key_col: str = "key",
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """stateful_counter on the Spark 4 transformWithStateInPandas API:
-    ValueState instead of the flat GroupState tuple, per-state TTL
-    handled by the store itself (closer to Redis EXPIRE than the
-    applyInPandasWithState timeout, which resets on every update and
-    is per-group). Output parity with stateful_counter is asserted in
-    tests when the runtime supports the API (env-gated on protobuf).
-
-    Requires the RocksDB state store provider:
-      spark.sql.streaming.stateStore.providerClass =
-        ...state.RocksDBStateStoreProvider
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    state_schema = T.StructType([T.StructField("n", T.LongType())])
-
-    class Counter(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle):
-            self.count = handle.getValueState(
-                "count", state_schema, ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n = sum(len(pdf) for pdf in rows)
-            prev = self.count.get()[0] if self.count.exists() else 0
-            total = prev + n
-            self.count.update((total,))
-            yield pd.DataFrame({"key": [key[0]], "count": [total]})
-
-        def close(self):
-            pass
-
-    return keyed.groupBy(F.col(key_col).alias("key")).transformWithStateInPandas(
-        Counter(),
-        outputStructType=COUNTER_SCHEMA,
-        outputMode="Update",
-        # state TTL is only legal under ProcessingTime — with
-        # timeMode="None" Spark rejects the getValueState ttl at
-        # query start (STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_
-        # ASSIGN_TTL), so the TTL path could never run
-        timeMode="ProcessingTime" if ttl_ms is not None else "None",
-    )

@@ -5,8 +5,6 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-import pytest
-
 from pyspark.sql import types as T
 
 from data_engineering_hs_spark.streaming.kv import stateful_counter, ttl_filter
@@ -49,36 +47,4 @@ class TestKvState:
         rows = table.groupBy("key").max("count").collect()
         got = {r["key"]: r["max(count)"] for r in rows}
         assert got == {"espresso": 3, "latte": 1}
-        q.stop()
-
-
-class TestKvStateTws:
-    def test_tws_counter_parity_when_runtime_supports_it(self, spark, tmp_path):
-        """transformWithStateInPandas backend must agree with the
-        applyInPandasWithState counter. Env-gated: the TWS Python
-        runner needs a working google.protobuf (absent here), like
-        the live-Kafka gate."""
-        from data_engineering_hs_spark.streaming.kv import (
-            _tws_available,
-            stateful_counter_tws,
-        )
-
-        if not _tws_available():
-            pytest.skip("google.protobuf unavailable: TWS runner cannot start")
-        d = str(tmp_path / "keys")
-        os.makedirs(d)
-        schema = T.StructType([T.StructField("key", T.StringType())])
-        spark.createDataFrame(
-            [("espresso",), ("espresso",), ("latte",)], schema
-        ).coalesce(1).write.mode("append").parquet(d)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        stream = spark.readStream.schema(schema).parquet(d)
-        counts = stateful_counter_tws(stream)
-        q, table = run_to_memory(counts, "kv_counter_tws", "update")
-        rows = table.groupBy("key").max("count").collect()
-        got = {r["key"]: r["max(count)"] for r in rows}
-        assert got == {"espresso": 2, "latte": 1}
         q.stop()
